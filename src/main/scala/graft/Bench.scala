@@ -1,8 +1,12 @@
 package graft
 import org.apache.spark.sql.SparkSession
 object Bench {
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+  /** The tuned session posture every bench-style main runs under (Bench,
+    * PlanDump). Verify keeps the stock posture: correctness must not
+    * depend on any of these knobs. `SPARK_GRAFT_CPUS` sets the task
+    * slots (default 32); `SPARK_GRAFT_SHUFFLE` the shuffle width
+    * (default: the slot count). */
+  def session(): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // shuffle width decoupled from task slots: the sf100 rung runs
     // local[16] (halving concurrent execution-page demand — the r12
@@ -65,17 +69,75 @@ object Bench {
       // GC.run freed 6 GB instantly, proving the mechanism). 2min keeps
       // blockmgr near one query's working set; the GC itself is a
       // sub-second pause amortized across the suite.
-      // r14: overridable — this host's filesystem is quota'd to ~94 GB
-      // effective, and the sf100 rung's dead-shuffle transient outpaced
-      // the 2min cadence during the write-heavy stretch (ENOSPC with
-      // 11 GB of already-dead blocks observed; the next periodic GC
-      // freed them). A 30s cadence caps the dead-block transient at a
-      // quarter of the 2min one for a sub-second pause every 30s —
-      // disk-budget tuning a real deployment sets per host, hence env.
-      .config("spark.cleaner.periodicGC.interval",
-        sys.env.getOrElse("SPARK_GRAFT_GC_INTERVAL", "2min"))
+      .config("spark.cleaner.periodicGC.interval", "2min")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
+  /** Warm-up: JIT + classloading + parquet-reader init dominate the
+    * first job in a fresh JVM (~4-5 s) and aren't any query's cost, so
+    * one small scan+agg+window pass loads the hot code paths. The
+    * session-scoped standing artifacts (IVF centroids, shared LSH pairs,
+    * CC labels, maintained kNN lineages, fixtures, …) also materialize
+    * here: they are write-once batch artifacts by design (at 100 TB,
+    * standing tables), so queries are timed against the standing index,
+    * not its construction.
+    *
+    * Each step runs on its own: a failing step logs its name and
+    * exception to stderr and the rest still run (a broken artifact then
+    * lands in its query's timing, never kills the run). Returns the
+    * failed steps with their exceptions. */
+  def warm(spark: SparkSession, dir: String): Seq[(String, Throwable)] = {
+    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.functions._
+    import graft.dedup.Dedup
+    import graft.sources.Fixtures
+    import graft.vector.{KnnIncr, KnnPart, KnnRouter, VectorOps}
+    def li = spark.read.parquet(s"$dir/lineitem.parquet")
+    val steps: Seq[(String, () => Any)] = Seq(
+      "jit-agg" -> (() => li.groupBy("l_returnflag").count().count()),
+      "jit-window" -> (() => li.limit(1000).withColumn("rn",
+        row_number().over(Window.partitionBy("l_returnflag").orderBy("l_orderkey")))
+        .count()),
+      "ivf-centroids" -> (() => VectorOps.ivfCentroids(spark, dir).count()),
+      "pq-codebooks" -> (() => VectorOps.refinedPqCodebooks(spark, dir).count()),
+      "knn-clusters" -> (() => VectorOps.qKnnClusters(spark, dir).count()),
+      "fixtures" -> (() => Fixtures.ensure(spark)),
+      "minhash-pairs" -> (() => Dedup.minhashPairs(spark, dir).count()),
+      // CC label tables: corpus labels shared by q_dup_clusters /
+      // q_leakage_split / q_curate, fixture labels by q_emb_clusters
+      "corpus-clusters" -> (() => Dedup.corpusClusters(spark, dir).count()),
+      "emb-clusters" -> (() => Fixtures.qEmbClusters(spark, dir).count()),
+      "retrieval" -> (() => graft.text.Retrieval.warm(spark, dir)),
+      "ledger" -> (() => graft.etl.Ledger.warm(spark, dir)),
+      "compact-input" -> (() => graft.ops.Sink.warmCompactInput(spark, dir)),
+      // maintained-ANN lineage + index (q_knn_incr), its stream twin
+      // (q_knn_stream), the maintained partition trie (q_knn_part_incr),
+      // the per-predicate-value tries (q_knn_filtered_part) and the
+      // router fixture (q_knn_routed): the queries time serving, not
+      // fixture setup or the stream drain
+      "knn-incr" -> (() => KnnIncr.qKnnIncr(spark, dir).count()),
+      "knn-stream" -> (() => KnnIncr.qKnnStream(spark, dir).count()),
+      "knn-part-incr" -> (() => KnnPart.qKnnPartIncr(spark, dir).count()),
+      "knn-part" -> (() => KnnPart.warm(spark, dir)),
+      "knn-router" -> (() => KnnRouter.warm(spark)),
+      // standing dim-key bloom (q_bloom_join's semi-join reducer)
+      "orderkey-bloom" -> (() => graft.ops.BloomJoin.builtOrderkeyBloom(spark, dir)))
+    steps.flatMap { case (name, step) =>
+      try { step(); None }
+      catch { case e: Throwable =>
+        System.err.println(s"[warm] $name failed: ${describe(e)}")
+        Some(name -> e)
+      }
+    }
+  }
+
+  private def describe(e: Throwable): String = s"${e.getClass.getName}: ${e.getMessage}"
+
+  def main(args: Array[String]): Unit = {
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val spark = session()
     // Disk fingerprint (r11 VERDICT #8): cross-round bench comparisons
     // need their denominator IN the artifact — this VM tier drifts
     // (r9 93/276, r10 228/510, r11 197/456 MB/s cold-read/write), and
@@ -135,61 +197,7 @@ object Bench {
         Double.box(wMbs), Double.box(rMbs), Double.box(read / 1e6),
         Integer.valueOf(dropped))
     } catch { case _: Throwable => """"fp":{}""" }
-    // Warmup: JIT + classloading + parquet-reader init dominate the
-    // first job in a fresh JVM (~4-5 s) and aren't any query's cost.
-    // One small scan+agg+window pass loads the hot code paths. The
-    // session-scoped index artifacts (IVF centroids, shared LSH pairs,
-    // fixtures) also materialize here: they are write-once batch
-    // artifacts by design (at 100 TB, standing tables), so queries are
-    // timed against the standing index, not its construction.
-    try {
-      val w = spark.read.parquet(s"$sfDir/lineitem.parquet")
-      w.groupBy("l_returnflag").count().count()
-      import org.apache.spark.sql.expressions.Window
-      import org.apache.spark.sql.functions._
-      w.limit(1000).withColumn("rn",
-        row_number().over(Window.partitionBy("l_returnflag").orderBy("l_orderkey")))
-        .count()
-      graft.vector.VectorOps.ivfCentroids(spark, sfDir).count()
-      graft.vector.VectorOps.refinedPqCodebooks(spark, sfDir).count()
-      graft.vector.VectorOps.qKnnClusters(spark, sfDir).count()
-      graft.vector.VectorOps.warmAnnExact(spark, sfDir)
-      graft.sources.Fixtures.ensure(spark)
-      // The remaining standing artifacts (r6→r7): pass 1 then times
-      // every query at standing-index steady state, and the min-of-
-      // passes protocol keeps that number even though release() makes
-      // pass 2 rebuild (r6's q_minhash_pairs 0.04→0.95 s "regression"
-      // was exactly a build cost landing in pass 1 with nothing to
-      // reuse it from — the artifact belongs to warmup, not to any
-      // one query's timing).
-      graft.dedup.Dedup.minhashPairs(spark, sfDir).count()
-      // CC label tables (standing dedup deliverable, r13): corpus
-      // labels shared by q_dup_clusters/q_leakage_split/q_curate,
-      // fixture labels by q_emb_clusters — same steady-state contract
-      graft.dedup.Dedup.corpusClusters(spark, sfDir).count()
-      graft.sources.Fixtures.qEmbClusters(spark, sfDir).count()
-      graft.text.Retrieval.warm(spark, sfDir)
-      graft.etl.Ledger.warm(spark, sfDir)
-      graft.ops.Sink.warmCompactInput(spark, sfDir)
-      // maintained-ANN lineage + index (q_knn_incr's standing table):
-      // built here so pass 1 times the SERVING join, not fixture setup
-      graft.vector.KnnIncr.qKnnIncr(spark, sfDir).count()
-      // stream-maintained twin lineage (q_knn_stream's standing table +
-      // subscription) — the query times serving, not the stream drain
-      graft.vector.KnnIncr.qKnnStream(spark, sfDir).count()
-      // maintained-PARTITION-trie lineage (q_knn_part_incr's standing
-      // table + index + serve artifacts) — same rationale
-      graft.vector.KnnPart.qKnnPartIncr(spark, sfDir).count()
-      // per-predicate-value partition trie + probe relation
-      // (q_knn_filtered_part's standing artifacts) — same rationale
-      graft.vector.KnnPart.warm(spark, sfDir)
-      // router fixture + route measurements + the fixture's partition
-      // artifacts (q_knn_routed's standing state) — same rationale
-      graft.vector.KnnRouter.warm(spark)
-      // standing dim-key bloom (q_bloom_join's semi-join reducer):
-      // built once per (session, corpus) like every other artifact
-      graft.ops.BloomJoin.builtOrderkeyBloom(spark, sfDir)
-    } catch { case _: Throwable => () }
+    val warmFailed = warm(spark, sfDir)
     // Two full passes, min per query: single-pass numbers on this VM
     // carry ±40 % contention spikes (PERF.md); the min of two
     // decorrelated passes is the reproducible steady-state cost.
@@ -201,16 +209,30 @@ object Bench {
     // run (an empty Seq.fill would crash the reduce below)
     val passes = math.max(1,
       sys.env.get("SPARK_GRAFT_BENCH_PASSES").flatMap(_.toIntOption).getOrElse(2))
-    def once(): Map[String, Double] = SparkEntry.queries.map { case (name, fn) =>
+    // per query: Right((wall_s, build_s)) — build_s is the DataFrame
+    // construction inside the query function, wall_s adds the count()
+    // — or Left(the exception of a failed pass)
+    type Run = Either[Throwable, (Double, Double)]
+    def once(): Map[String, Run] = SparkEntry.queries.map { case (name, fn) =>
       // stderr marker BEFORE each query: when a rung dies mid-suite
       // (the r11/r12 executor-OOM → dead-context → mass-instant-error
       // signature), the triage bundle's stderr then NAMES the victim —
       // the per-query map alone can't (map iteration order ≠ sorted)
       System.err.println(s"[bench] $name start")
       val t0 = System.nanoTime()
-      val ok = try { fn(spark, sfDir).count(); true }
-               catch { case _: Throwable => false }
-      name -> (if (ok) (System.nanoTime() - t0) / 1e9 else Double.PositiveInfinity)
+      name -> (try {
+        val df = fn(spark, sfDir)
+        val t1 = System.nanoTime()
+        df.count()
+        Right(((System.nanoTime() - t0) / 1e9, (t1 - t0) / 1e9))
+      } catch { case e: Throwable => Left(e) })
+    }
+    // min over the passes that succeeded; a query fails only when it
+    // failed every pass, and then carries its last failure
+    def best(a: Run, b: Run): Run = (a, b) match {
+      case (Right((w1, b1)), Right((w2, b2))) => Right((math.min(w1, w2), math.min(b1, b2)))
+      case (Right(r), Left(_)) => Right(r)
+      case (_, r) => r
     }
     // Between passes, RELEASE the standing state (every tracked
     // localCheckpoint + index memo): peak executor-block footprint then
@@ -220,20 +242,19 @@ object Bench {
     // suite fits the 64 GB budget. Pass 2 rebuilds indexes lazily —
     // min-of-passes keeps the standing-index steady-state timing from
     // pass 1 (warmup built the indexes before it).
-    val results = (1 to passes).map { p =>
+    val runs = (1 to passes).map { p =>
       if (p > 1) graft.StandingState.release()
       once()
-    }
-      .reduce((a, b) => a.map { case (k, v) => k -> math.min(v, b.getOrElse(k, v)) })
-      .map { case (k, v) => k -> (if (v.isInfinity) -1.0 else v) } // -1 = failed every pass
+    }.reduce((a, b) => a.map { case (k, r) => k -> best(r, b.getOrElse(k, r)) })
+    val results = runs.map { case (k, r) => k -> r.fold(_ => -1.0, _._1) } // -1 = failed every pass
+    val errors = runs.toSeq.collect { case (k, Left(e)) => k -> e }.sortBy(_._1)
     // ms precision keeps the 139-query JSON line compact enough that
     // log-capture truncation can't eat the tail (r3's record lost 63
     // per-query entries to it)
     def ms(v: Double): String =
       String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-    val qs = results.toSeq.sortBy(_._1)
-      .map { case (k, v) => "\"" + k + "\":" + ms(v) }
-      .mkString("{", ",", "}")
+    def jsonMap(m: Iterable[(String, Double)]): String =
+      m.toSeq.sortBy(_._1).map { case (k, v) => "\"" + k + "\":" + ms(v) }.mkString("{", ",", "}")
     val total =
       if (results.nonEmpty) results.values.filter(_ >= 0).sum else 0.0
     // Failures must be LOUD, not a -1 buried in a 190-entry map: q_tpch2
@@ -241,46 +262,29 @@ object Bench {
     // downstream looked for it. Every record now carries the explicit
     // failed list + count, stderr shouts, and the exit code is nonzero
     // so any harness (ladder scripts, CI, the driver) sees it.
-    val failed = results.toSeq.filter(_._2 < 0).map(_._1).sorted
+    val failed = errors.map(_._1)
     val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val line =
-      s"""{"metric":"total","value":${ms(total)},"unit":"sec","queries":$qs,"n_failed":${failed.size},"failed":$failedJson,"sf":"$sfDir",$fp}"""
-    println(line)
+    val head = s""""metric":"total","value":${ms(total)},"unit":"sec","queries":${jsonMap(results)}"""
+    println(s"""{$head,"n_failed":${failed.size},"failed":$failedJson,"sf":"$sfDir",$fp}""")
     if (failed.nonEmpty)
       System.err.println(s"BENCH FAILURES (${failed.size}): ${failed.mkString(", ")}")
-    // The driver's log-tail capture truncated the per-query map two
-    // rounds running (r3: 76/139 survived, r4: 98/141). The stdout line
-    // keeps the driver contract; the SAME record also goes to a file
-    // (default target/bench.json, SPARK_GRAFT_BENCH_OUT to override) so
-    // the full 141-entry map always survives — the round report embeds
-    // this file verbatim.
+    // A log-tail capture can truncate the per-query map, so the full
+    // record also goes to a file (default target/bench.json,
+    // SPARK_GRAFT_BENCH_OUT to override). The file adds what the stdout
+    // contract has no room for: each query's construction time, and why
+    // each failed query and warm step failed.
+    def reasons(kind: String, es: Seq[(String, Throwable)]): String = es.map { case (k, e) =>
+      s"""{"$kind":${Verify.json(k)},"error":${Verify.json(describe(e))}}"""
+    }.mkString("[", ",", "]")
+    val record = s"""{$head,"build_s":${jsonMap(runs.collect { case (k, Right((_, b))) => k -> b })},""" +
+      s""""n_failed":${failed.size},"failed":${reasons("query", errors)},""" +
+      s""""warm_failed":${reasons("step", warmFailed)},"sf":"$sfDir",$fp}"""
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "target/bench.json")
     try {
       val p = java.nio.file.Paths.get(outPath)
       Option(p.getParent).foreach(java.nio.file.Files.createDirectories(_))
-      java.nio.file.Files.write(p, (line + "\n").getBytes("UTF-8"))
+      java.nio.file.Files.write(p, (record + "\n").getBytes("UTF-8"))
     } catch { case e: Throwable => System.err.println(s"bench.json write failed: $e") }
-    // Opt-in throughput mode (NOT the driver's gate): with
-    // SPARK_GRAFT_PARALLEL=n, also run the whole suite through an
-    // n-thread pool — queries share the session and the scheduler
-    // pipelines their jobs, amortizing the ~0.3 s/query fixed cost
-    // (plan+codegen+job setup) that dominates the sequential total at
-    // these scale factors. Prints a SECOND JSON line; the first keeps
-    // the per-query contract.
-    sys.env.get("SPARK_GRAFT_PARALLEL").map(_.toInt).filter(_ > 1).foreach { n =>
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(n)
-      implicit val ec: scala.concurrent.ExecutionContext =
-        scala.concurrent.ExecutionContext.fromExecutor(pool)
-      val t0 = System.nanoTime()
-      val futs = SparkEntry.queries.toSeq.map { case (name, fn) =>
-        scala.concurrent.Future { try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L } }
-      }
-      scala.concurrent.Await.result(
-        scala.concurrent.Future.sequence(futs), scala.concurrent.duration.Duration.Inf)
-      val wall = (System.nanoTime() - t0) / 1e9
-      pool.shutdown()
-      println(s"""{"metric":"parallel_wall","value":$wall,"unit":"sec","threads":$n,"sf":"$sfDir"}""")
-    }
     // LAST line is a SELF-CONTAINED compact record (suite total +
     // slowest-10 + query count, ~500 chars): the driver keeps only the
     // final ~2000 chars of output, and the full 176-entry map above

@@ -116,8 +116,10 @@ object Ledger {
   /** Collected-manifest cache (r14, guide §5: the driver should do
     * almost no data work — and re-reading a file-count-sized manifest
     * through a full Spark job per call IS data work at the driver's
-    * expense). Keyed (table, version); VALIDATED per call against the
-    * manifest directory's file identity (every entry's name + length +
+    * expense). Keyed (session, table, version): the cached relation is
+    * bound to the session that built it, and a new session must not be
+    * served one whose context has stopped. VALIDATED per call against
+    * the manifest directory's file identity (every entry's name + length +
     * mtime — a Spark rewrite always changes the part file's UUID name),
     * so an in-session table rebuild or vacuum can never serve stale
     * rows — the exact staleness hazard that made r13 reject a naive
@@ -131,7 +133,7 @@ object Ledger {
     * list in driver memory). Cleared by StandingState.release() with
     * every other memo. */
   private val manifestMemo =
-    graft.StandingState.memo[(String, Int), (String, DataFrame)]()
+    graft.StandingState.memo[(String, String, Int), (String, DataFrame)]()
 
   /** The manifest of version N (file-count-sized). A manifest without
     * its `_SUCCESS` marker is a PARTIAL write from a crashed committer
@@ -147,14 +149,15 @@ object Ledger {
     val token = st.sortBy(_.getPath.getName)
       .map(s => s"${s.getPath.getName}:${s.getLen}:${s.getModificationTime}")
       .mkString(",")
-    manifestMemo.get((table, version)) match {
+    val key = (spark.sparkContext.applicationId, table, version)
+    manifestMemo.get(key) match {
       case Some((t, df)) if t == token => df
       case _ =>
         val raw = spark.read.parquet(p)
         val rows = raw.collect()
         val local = spark.createDataFrame(
           java.util.Arrays.asList(rows: _*), raw.schema)
-        manifestMemo.put((table, version), (token, local))
+        manifestMemo.put(key, (token, local))
         local
     }
   }
@@ -211,7 +214,7 @@ object Ledger {
     * cache removes is the per-call listing + footer read + relation
     * resolution that every applyDv/readChanges pair re-paid. */
   private val dvPlanMemo =
-    graft.StandingState.memo[(String, Int), (String, Option[DataFrame])]()
+    graft.StandingState.memo[(String, String, Int), (String, Option[DataFrame])]()
 
   /** Version N's outstanding DELETION VECTOR — the keys hidden from
     * reads without rewriting their data files (single column named
@@ -226,11 +229,12 @@ object Ledger {
       val token = st.sortBy(_.getPath.getName)
         .map(s => s"${s.getPath.getName}:${s.getLen}:${s.getModificationTime}")
         .mkString(",")
-      dvPlanMemo.get((table, version)) match {
+      val key = (spark.sparkContext.applicationId, table, version)
+      dvPlanMemo.get(key) match {
         case Some((t, df)) if t == token => df
         case _ =>
           val df: Option[DataFrame] = Some(spark.read.parquet(p))
-          dvPlanMemo.put((table, version), (token, df))
+          dvPlanMemo.put(key, (token, df))
           df
       }
     }
@@ -1155,11 +1159,11 @@ object Ledger {
     * the `If-None-Match`/DynamoDB conditional-put guarantee the in-JVM
     * [[CasLogStore]] stands in for. This is the stress-harness
     * emulation, not a production store — a plain-S3 deployment still
-    * swaps in the service-backed conditional put; what ProbeCasMulti
+    * swaps in the service-backed conditional put; what LedgerProcessSpec
     * certifies with it is that the commit protocol ABOVE the trait
     * (claim → sidecars → manifest → validate/rebase) is serializable
     * across real JVMs for the conditional-put claim style too, not only
-    * for create-exclusive (ProbeOccMulti's territory). In-JVM
+    * for create-exclusive (the same spec's other case). In-JVM
     * contenders hold their lock through the JVM-wide lock table
     * (`OverlappingFileLockException` → brief spin), so the same store
     * also serves the threaded stress. */

@@ -1130,20 +1130,6 @@ object VectorOps {
     * drive the same methods over planted-cluster fixtures where the
     * absolute numbers are structural. Each method's hit count rides a
     * left-semi join against the exact set — id-only shuffles. */
-  /** Exact-reference table for [[qAnnRecall]] — see the STANDING note
-    * inside it. Cleared by StandingState.release() like every memo. */
-  private val annExactMemo = graft.StandingState.memo[(String, String), DataFrame]()
-
-  /** Warmup hook: build the standing exact-reference table so pass 1
-    * times the four method pipelines + semi-joins, not the reference
-    * build (same contract as every other warm hook). */
-  def warmAnnExact(spark: SparkSession, dir: String): Unit = {
-    annExactMemo.getOrElseUpdate((spark.sparkContext.applicationId, dir),
-      qSimTopk(spark, dir, 5, 3).select(col("q_id"), col("vec_id"))
-        .localCheckpointTracked())
-    ()
-  }
-
   def qAnnRecall(spark: SparkSession, dir: String): DataFrame = {
     val k = 3
     val nQ = 5
@@ -1155,18 +1141,8 @@ object VectorOps {
     // eager checkpoint runs the exact pass once and shrinks every
     // branch to its own method pipeline (guide §5: reuse + expensive
     // recompute = the one case for materialization).
-    // STANDING (r14): the exact ground truth for a FIXED evaluation
-    // query set is the canonical standing artifact of recall
-    // evaluation — at 100 TB it is the expensive-to-build, reused-for-
-    // every-dial-experiment reference table (one brute-force pass per
-    // corpus version), model-row-sized (nQ×k = 15 rows). Memoized on
-    // (session, corpus) with the same warmup/release lifecycle as
-    // ivfCentroids; q_sim_topk itself (the declared exact query) still
-    // executes its own plan per invocation — only the recall audit
-    // serves its reference from the standing table.
-    val exact = annExactMemo.getOrElseUpdate((spark.sparkContext.applicationId, dir),
-      qSimTopk(spark, dir, nQ, k).select(col("q_id"), col("vec_id"))
-        .localCheckpointTracked())
+    val exact = qSimTopk(spark, dir, nQ, k).select(col("q_id"), col("vec_id"))
+      .localCheckpointTracked()
     def row(name: String, df: DataFrame): DataFrame =
       df.select(col("q_id"), col("vec_id"))
         .join(exact, Seq("q_id", "vec_id"), "left_semi")

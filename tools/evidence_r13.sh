@@ -1,6 +1,6 @@
 #!/bin/bash
 # Round-13 evidence passes that are NOT ladder rungs: scaled spot
-# checks (machine-ingested verdicts), the two multi-process probes,
+# checks (machine-ingested verdicts), the cross-process ledger spec,
 # and the full sf0.01 gate record. Run after `sbt compile` and the
 # ScaleGen corpora exist; each sub-command is idempotent.
 set -euo pipefail
@@ -31,13 +31,8 @@ spot() { # sfdir outdir queries...
 case "${1:-all}" in
   sf1)  spot target/scaledata/sf1 /tmp/verify_r13_sf1 $SF1_SPOTS ;;
   sf10) spot target/scaledata/sf10 /tmp/verify_r13_sf10 $SF10_SPOTS ;;
-  probes)
-    java -Xmx8g $JOPTS -cp "$CP" graft.ProbeOccMulti 6 2>/dev/null \
-      | grep '{' | tail -1 > /tmp/occ_multiproc_r13.json
-    cat /tmp/occ_multiproc_r13.json
-    java -Xmx8g $JOPTS -cp "$CP" graft.ProbeCasMulti 6 2>/dev/null \
-      | grep '{' | tail -1 > /tmp/cas_multiproc_r13.json
-    cat /tmp/cas_multiproc_r13.json
+  probes) # cross-process ledger commits (child JVMs per writer)
+    sbt -batch "testOnly graft.LedgerProcessSpec"
     ;;
   gate) # full sf0.01 gate: Verify everything, DuckDB-compare everything
     SPARK_GRAFT_CPUS=16 java -Xmx40g $JOPTS -cp "$CP" graft.Verify \
