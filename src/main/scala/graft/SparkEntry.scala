@@ -95,8 +95,8 @@ object SparkEntry {
     "q_sim_ivf" -> ((s: SparkSession, d: String) => VectorOps.qSimIvf(s, d)),
     "q_knn_join" -> ((s: SparkSession, d: String) => VectorOps.qKnnJoin(s, d)),
     // the multi-probe dial as a DECLARED oracle path: P=2 pinned in the
-    // query (not the -Dgraft.knn.probes property), so the recall lever
-    // the r8 clustered study measured has a standing correctness gate
+    // query, so the recall lever the r8 clustered study measured has a
+    // standing correctness gate
     "q_knn_join_mp" -> ((s: SparkSession, d: String) => VectorOps.qKnnJoinMp(s, d, probes = 2)),
     "q_knn_filtered" -> ((s: SparkSession, d: String) => VectorOps.qKnnFiltered(s, d)),
     "q_knn_filtered_part" -> ((s: SparkSession, d: String) => graft.vector.KnnPart.qKnnFilteredPart(s, d)),

@@ -4,12 +4,34 @@ import scala.collection.concurrent.TrieMap
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Session-scoped ledger of the engine's standing artifacts — every
-  * localCheckpointed RDD/Dataset and every (applicationId, dir)-keyed
-  * memo the index layer creates (kNN trie, IVF centroids, BM25 doc
-  * index, shared LSH pair tables, …).
+  * localCheckpointed RDD/Dataset and every built index, lineage, label
+  * table or sidecar the engine keeps for a session (kNN trie, IVF
+  * centroids, BM25 doc index, shared LSH pair tables, ledger lineages,
+  * …).
+  *
+  * ONE registry, [[standing]], holds them all. It is keyed
+  * (applicationId, name, scope) and builds that key itself, so no
+  * caller decides how an artifact is bound to its session: an artifact
+  * built under one SparkContext is never served to another (a stopped
+  * context's checkpoint blocks and LocalRelations are dead handles).
+  * Standing artifacts are indexes, codebooks, tries, lineages and
+  * sidecars — state a declared query READS; a declared query's own
+  * result should not stand here (it would time a lookup, not the
+  * query). The served kNN branches (`knn-router-served`,
+  * `knn-part-served`) still do.
+  *
+  * Two memo types are kept beside the registry because their
+  * semantics differ, not their keying:
+  *  - [[VersionedMemo]]: entries carry the version of the MUTABLE table
+  *    they were built at, with stamp-advance rules for incremental
+  *    refresh (KnnIncr, KnnPart's maintained trie);
+  *  - [[BoundedMemo]]: an LRU bounded by a budget, whose serve-scope
+  *    pin leases defer block release (KnnPart's per-value tries).
+  * Folding them into the registry would make the shared code branch
+  * on which caller it serves.
   *
   * At 100 TB these are write-once batch tables that live outside any
   * one driver; locally they pin executor block memory for the
@@ -18,15 +40,28 @@ import org.apache.spark.sql.DataFrame
   * r5's sf100 two-pass bench needed a 96 GB heap precisely because
   * pass 1's accumulated checkpoints were still resident while pass 2
   * rebuilt nothing and added its own per-query materializations.
-  * [[release]] unpersists every tracked checkpoint and empties every
-  * registered memo; correctness is unaffected (memos cache
+  * [[release]] unpersists every tracked checkpoint and empties the
+  * registry and both memo types; correctness is unaffected (they hold
   * deterministic artifacts — subsequent queries rebuild them from
   * source), only the build cost is re-paid.
   */
 object StandingState {
   private val rddLedger = new java.util.concurrent.ConcurrentLinkedQueue[RDD[_]]()
-  private val memoLedger =
+  private val registry = TrieMap[(String, String, Any), Any]()
+  private val versionedLedger =
     new java.util.concurrent.ConcurrentLinkedQueue[TrieMap[_, _]]()
+
+  /** The standing artifact `name` over `scope` for this session: built
+    * by `build` on first use, served from the registry until
+    * [[release]]. `scope` is the rest of the artifact's identity (a
+    * corpus dir, `(dir, threshold)`, a tag, a validation token, …). The
+    * registry casts the stored value by name, so a name must mean one
+    * type: each name is a string literal at exactly one call site
+    * (ToolsSpec enforces it). */
+  private[graft] def standing[V](spark: SparkSession, name: String, scope: Any)(
+      build: => V): V =
+    registry.getOrElseUpdate((spark.sparkContext.applicationId, name, scope), build)
+      .asInstanceOf[V]
 
   /** Track a localCheckpointed RDD (the materializeStatsReset path). */
   private[graft] def trackRdd[T](rdd: RDD[T]): RDD[T] = { rddLedger.add(rdd); rdd }
@@ -43,13 +78,6 @@ object StandingState {
     df
   }
 
-  /** A registered memo: cleared (not removed) by [[release]]. */
-  private[graft] def memo[K, V](): TrieMap[K, V] = {
-    val m = TrieMap[K, V]()
-    memoLedger.add(m)
-    m
-  }
-
   /** `df.localCheckpointTracked()` — an eager localCheckpoint whose
     * blocks are registered in the ledger so [[release]] can free them.
     * Every engine call site uses this instead of the raw method. */
@@ -58,7 +86,7 @@ object StandingState {
   }
 
   /** A VERSION-STAMPED memo for standing artifacts over MUTABLE tables
-    * (ledger-backed indexes). The session-keyed [[memo]] assumes an
+    * (ledger-backed indexes). The session-keyed [[standing]] assumes an
     * immutable corpus — correct for the read-only testdata dirs, but a
     * memoized index over a LEDGER table that takes a merge would serve
     * stale results silently for the rest of the session. Entries here
@@ -118,19 +146,22 @@ object StandingState {
       }
   }
 
-  private[graft] def versionedMemo[K, V](): VersionedMemo[K, V] =
-    new VersionedMemo[K, V](memo[K, (Long, V)]())
+  private[graft] def versionedMemo[K, V](): VersionedMemo[K, V] = {
+    val m = TrieMap[K, (Long, V)]()
+    versionedLedger.add(m)
+    new VersionedMemo[K, V](m)
+  }
 
   /** A BOUNDED standing-artifact registry: at most `budget()` entries,
     * least-recently-USED first out, `onEvict` releasing the evicted
-    * artifact's persisted blocks. The unbounded [[memo]] is right for
+    * artifact's persisted blocks. The unbounded [[standing]] is right for
     * artifacts whose key space is the session's corpus set (one kNN
     * trie per dir); it is wrong for artifacts keyed by a DATA VALUE —
     * one partition trie per predicate value over a high-cardinality
     * filter column is an unbounded standing cost, so those registries
     * carry a budget (r11 VERDICT #4). Eviction frees blocks, never
     * correctness: an evicted entry rebuilds from source on next use,
-    * exactly like a [[release]]d memo. `budget()` is re-read per
+    * exactly like a [[release]]d artifact. `budget()` is re-read per
     * insertion so dial experiments can change it between calls.
     * Eviction is SAFE against in-flight serves: [[BoundedMemo.pinned]]
     * is a serve-scope lease that defers the evicted entry's block
@@ -229,10 +260,11 @@ object StandingState {
   /** Checkpoints currently tracked (LEAKCHECK / diagnostics). */
   def trackedCheckpoints: Int = rddLedger.size
 
-  /** Unpersist every tracked checkpoint and clear every memo. Safe to
-    * call repeatedly; double-unpersist of an already-released RDD is a
-    * no-op. Not safe concurrently with in-flight queries that hold the
-    * memoized frames (the bench calls it only between passes). */
+  /** Unpersist every tracked checkpoint and clear the registry and every
+    * memo. Safe to call repeatedly; double-unpersist of an
+    * already-released RDD is a no-op. Not safe concurrently with
+    * in-flight queries that hold the memoized frames (the bench calls it
+    * only between passes). */
   def release(blocking: Boolean = false): Unit = {
     var r = rddLedger.poll()
     while (r != null) {
@@ -240,7 +272,8 @@ object StandingState {
       catch { case _: Throwable => () }
       r = rddLedger.poll()
     }
-    memoLedger.forEach(m => m.clear())
+    registry.clear()
+    versionedLedger.forEach(m => m.clear())
     boundedLedger.forEach(m => m.clearAll())
   }
 }

@@ -1,7 +1,5 @@
 package graft.dedup
 
-import scala.collection.concurrent.TrieMap
-
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -91,10 +89,8 @@ object Dedup {
     * q_dup_clusters share ONE signature/LSH computation per run, and so
     * every intermediate persist is released before returning (no cache
     * leaks across a long-lived session). */
-  private val pairsMemo = graft.StandingState.memo[(String, String, Double), DataFrame]()
-
   def minhashPairs(spark: SparkSession, dir: String, threshold: Double = 0.5): DataFrame =
-    pairsMemo.getOrElseUpdate((spark.sparkContext.applicationId, dir, threshold),
+    graft.StandingState.standing(spark, "minhash-pairs", (dir, threshold))(
       computeMinhashPairs(spark, dir, threshold))
 
   private def computeMinhashPairs(spark: SparkSession, dir: String, threshold: Double): DataFrame = {
@@ -344,22 +340,6 @@ object Dedup {
     labels.select(col("u").as("doc_id"), col("label").as("cluster_id"))
   }
 
-  /** Cluster labels as a STANDING artifact (r13): the CC label table is
-    * the dedup deliverable a 100 TB deployment maintains as a table
-    * (the scale-shape notes below already said so) — three declared
-    * queries (q_dup_clusters, q_leakage_split over the corpus pairs;
-    * q_emb_clusters over the planted-dup fixture) each re-ran the
-    * whole driver-coordinated loop per call. Memoized per (session,
-    * tag) in the StandingState ledger exactly like [[minhashPairs]]'s
-    * pair table: released with every other standing artifact, rebuilt
-    * lazily, never persisted across runs. */
-  private val clusterMemo = graft.StandingState.memo[(String, String), DataFrame]()
-
-  def dupClustersMemo(spark: SparkSession, tag: String)(
-      pairs: => DataFrame): DataFrame =
-    clusterMemo.getOrElseUpdate((spark.sparkContext.applicationId, tag),
-      dupClusters(pairs))
-
   /** Declared query: near-dup clusters of the corpus (docs in ≥1
     * MinHash-verified pair, labeled by their cluster's min doc_id).
     * Shares the memoized pair computation with [[qMinhashPairs]] — one
@@ -368,11 +348,17 @@ object Dedup {
     corpusClusters(spark, dir)
       .orderBy(col("doc_id"))
 
-  /** The corpus CC label table as a standing artifact — shared by
-    * q_dup_clusters, q_leakage_split and q_curate (all three consumed
-    * the same labels and each re-ran the propagation loop). */
+  /** The corpus CC label table as a STANDING artifact (r13): the CC
+    * label table is the dedup deliverable a 100 TB deployment maintains
+    * as a table (the scale-shape notes below already said so) — shared
+    * by q_dup_clusters, q_leakage_split and q_curate, which each re-ran
+    * the whole driver-coordinated propagation loop per call. Registered
+    * per (session, dir) exactly like [[minhashPairs]]'s pair table:
+    * released with every other standing artifact, rebuilt lazily, never
+    * persisted across runs. */
   def corpusClusters(spark: SparkSession, dir: String): DataFrame =
-    dupClustersMemo(spark, s"minhash:$dir")(minhashPairs(spark, dir))
+    graft.StandingState.standing(spark, "corpus-clusters", dir)(
+      dupClusters(minhashPairs(spark, dir)))
 
   /** LEAKAGE-SAFE train/val/test split — the assignment unit is the
     * near-dup CLUSTER, not the document: hashing doc_ids independently

@@ -113,32 +113,31 @@ object Ledger {
       .write.mode("overwrite").parquet(manifestPath(table, version))
   }
 
-  /** Collected-manifest cache (r14, guide §5: the driver should do
+  /** The manifest of version N (file-count-sized), served from a
+    * collected-manifest cache (r14, guide §5: the driver should do
     * almost no data work — and re-reading a file-count-sized manifest
     * through a full Spark job per call IS data work at the driver's
-    * expense). Keyed (session, table, version): the cached relation is
-    * bound to the session that built it, and a new session must not be
-    * served one whose context has stopped. VALIDATED per call against
-    * the manifest directory's file identity (every entry's name + length +
-    * mtime — a Spark rewrite always changes the part file's UUID name),
-    * so an in-session table rebuild or vacuum can never serve stale
-    * rows — the exact staleness hazard that made r13 reject a naive
-    * (table, version) memo. The cached value is the collected rows
-    * rebuilt as a LOCAL RELATION: every downstream
-    * `.select("path").collect()` constant-folds to a job-free
+    * expense). Keyed (session, table, version, token): the cached
+    * relation is bound to the session that built it, and a new session
+    * must not be served one whose context has stopped. The token is the
+    * manifest directory's file identity, read per call (every entry's
+    * name + length + mtime — a Spark rewrite always changes the part
+    * file's UUID name), so an in-session table rebuild or vacuum is a
+    * new key and can never serve stale rows — the exact staleness
+    * hazard that made r13 reject a naive (table, version) memo. The
+    * cached value is the collected rows rebuilt as a LOCAL RELATION:
+    * every downstream `.select("path").collect()` constant-folds to a job-free
     * LocalTableScan, and joins/prunes against the manifest carry local
     * rows instead of re-running listing + footer read + a collect job
     * per call. This is the snapshot-caching move every production
     * table format makes (Delta/Iceberg hold the live snapshot's file
-    * list in driver memory). Cleared by StandingState.release() with
-    * every other memo. */
-  private val manifestMemo =
-    graft.StandingState.memo[(String, String, Int), (String, DataFrame)]()
-
-  /** The manifest of version N (file-count-sized). A manifest without
-    * its `_SUCCESS` marker is a PARTIAL write from a crashed committer
-    * and must be invisible — reading it as committed would surface a
-    * half-published version. */
+    * list in driver memory). Superseded tokens' entries stay until
+    * StandingState.release() clears them with every other standing
+    * artifact.
+    *
+    * A manifest without its `_SUCCESS` marker is a PARTIAL write from a
+    * crashed committer and must be invisible — reading it as committed
+    * would surface a half-published version. */
   def manifest(spark: SparkSession, table: String, version: Int): DataFrame = {
     val p = manifestPath(table, version)
     val st = try fs(spark, table).listStatus(new Path(p))
@@ -146,19 +145,14 @@ object Ledger {
         Array.empty[org.apache.hadoop.fs.FileStatus] }
     require(st.exists(_.getPath.getName == "_SUCCESS"),
       s"version $version is not committed (no _SUCCESS marker in $p)")
+    // name:length:mtime assumes Spark-only writers (a rewrite always gets a new part-file name)
     val token = st.sortBy(_.getPath.getName)
       .map(s => s"${s.getPath.getName}:${s.getLen}:${s.getModificationTime}")
       .mkString(",")
-    val key = (spark.sparkContext.applicationId, table, version)
-    manifestMemo.get(key) match {
-      case Some((t, df)) if t == token => df
-      case _ =>
-        val raw = spark.read.parquet(p)
-        val rows = raw.collect()
-        val local = spark.createDataFrame(
-          java.util.Arrays.asList(rows: _*), raw.schema)
-        manifestMemo.put(key, (token, local))
-        local
+    graft.StandingState.standing(spark, "ledger-manifest", (table, version, token)) {
+      val raw = spark.read.parquet(p)
+      val rows = raw.collect()
+      spark.createDataFrame(java.util.Arrays.asList(rows: _*), raw.schema)
     }
   }
 
@@ -207,18 +201,16 @@ object Ledger {
   private def deletePath(table: String, version: Int) =
     s"$table/deletes/v$version"
 
-  /** Resolved-DV-plan cache (r14): same (token-validated) discipline
-    * as [[manifestMemo]], but the cached value is the LAZY resolved
+  /** Version N's outstanding DELETION VECTOR — the keys hidden from
+    * reads without rewriting their data files (single column named
+    * after the table's key). None = no merge-on-read deletes pending.
+    *
+    * Resolved-DV-plan cache (r14): same (token-validated) discipline
+    * as [[manifest]], but the cached value is the LAZY resolved
     * DataFrame, not collected rows — a deletion vector is data-sized
     * (deleted keys), so it stays a distributed relation; what the
     * cache removes is the per-call listing + footer read + relation
     * resolution that every applyDv/readChanges pair re-paid. */
-  private val dvPlanMemo =
-    graft.StandingState.memo[(String, String, Int), (String, Option[DataFrame])]()
-
-  /** Version N's outstanding DELETION VECTOR — the keys hidden from
-    * reads without rewriting their data files (single column named
-    * after the table's key). None = no merge-on-read deletes pending. */
   def deletionVector(spark: SparkSession, table: String, version: Int): Option[DataFrame] = {
     val p = deletePath(table, version)
     val st = try fs(spark, table).listStatus(new Path(p))
@@ -229,14 +221,8 @@ object Ledger {
       val token = st.sortBy(_.getPath.getName)
         .map(s => s"${s.getPath.getName}:${s.getLen}:${s.getModificationTime}")
         .mkString(",")
-      val key = (spark.sparkContext.applicationId, table, version)
-      dvPlanMemo.get(key) match {
-        case Some((t, df)) if t == token => df
-        case _ =>
-          val df: Option[DataFrame] = Some(spark.read.parquet(p))
-          dvPlanMemo.put(key, (token, df))
-          df
-      }
+      Some(graft.StandingState.standing(spark, "ledger-dv-plan", (table, version, token))(
+        spark.read.parquet(p)))
     }
   }
 
@@ -1856,16 +1842,14 @@ object Ledger {
 
   // ---- the declared queries ----
 
-  private val lineageMemo = graft.StandingState.memo[(String, String), String]()
-
   /** Build the deterministic v0→v3 lineage ONCE per (session, corpus)
     * — the standing-table discipline: at 100 TB the ledger table
     * already exists and queries ADDRESS versions, they don't re-create
     * history per query. Both declared queries read this one table;
-    * `StandingState.release()` clears the memo and the next query
+    * `StandingState.release()` clears it and the next query
     * rebuilds from source (same contract as the kNN/BM25 indexes). */
   private def builtLineage(spark: SparkSession, dir: String): String =
-    lineageMemo.getOrElseUpdate((spark.sparkContext.applicationId, dir), {
+    graft.StandingState.standing(spark, "ledger-lineage", dir) {
       val table = tableRoot(dir)
       val docs = Tables.documents(spark, dir)
         .select(col("doc_id"), col("source"), col("text"))
@@ -1874,7 +1858,7 @@ object Ledger {
       merge(spark, table, 1, changeset2(docs), "doc_id")
       compact(spark, table, 2, "doc_id")
       table
-    })
+    }
 
   /** Deterministic changeset 1 (Snapshot.v2's rules recast as MERGE
     * ops): delete doc_id%17==3, upsert %13==1 with a " [rev2]" suffix,
@@ -2005,6 +1989,25 @@ object Ledger {
     }.reduce(_.unionByName(_)).orderBy(col("version"))
   }
 
+  /** Build the replica ONCE per (session, corpus) — like every other
+    * standing artifact: at 100 TB the replica is a long-lived table a
+    * continuously-running [[replicate]] keeps converged; the query's
+    * steady cost is auditing its head, not re-bootstrapping CDC. The
+    * memoized build = bootstrap from v0 + one full stream drain; a
+    * release() rebuilds from scratch (fresh replica root + checkpoint). */
+  private[graft] def builtReplica(spark: SparkSession, dir: String): String =
+    graft.StandingState.standing(spark, "ledger-replica", dir) {
+      val up = builtLineage(spark, dir)
+      stageChanges(spark, up, "doc_id")
+      val down = graft.GraftPaths.sink("graft_ledger_repl", dir.replaceAll(".*/", ""))
+      create(spark, down, readVersion(spark, up, 0), "doc_id") // create() clears the root
+
+      val q = replicate(spark, up, down, "doc_id",
+        java.nio.file.Files.createTempDirectory("graft_repl_ckpt").toString)
+      try q.processAllAvailable() finally q.stop()
+      down
+    }
+
   /** Q-ledger-replicate: CDC fan-out end to end. Bootstrap a fresh
     * replica ledger from the shared lineage's v0 snapshot, then drive
     * [[replicate]] — CDF stream → net per-key reduction → exactly-once
@@ -2016,27 +2019,6 @@ object Ledger {
     * break the audit. The replica is rebuilt per run so the query is
     * self-contained and deterministic; its cost is v0-sized, and the
     * stream consumes the SAME staged CDF q_ledger_stream reads. */
-  private val replicaMemo = graft.StandingState.memo[(String, String), String]()
-
-  /** Build the replica ONCE per (session, corpus) — like every other
-    * standing artifact: at 100 TB the replica is a long-lived table a
-    * continuously-running [[replicate]] keeps converged; the query's
-    * steady cost is auditing its head, not re-bootstrapping CDC. The
-    * memoized build = bootstrap from v0 + one full stream drain; a
-    * release() rebuilds from scratch (fresh replica root + checkpoint). */
-  private def builtReplica(spark: SparkSession, dir: String): String =
-    replicaMemo.getOrElseUpdate((spark.sparkContext.applicationId, dir), {
-      val up = builtLineage(spark, dir)
-      stageChanges(spark, up, "doc_id")
-      val down = graft.GraftPaths.sink("graft_ledger_repl", dir.replaceAll(".*/", ""))
-      create(spark, down, readVersion(spark, up, 0), "doc_id") // create() clears the root
-
-      val q = replicate(spark, up, down, "doc_id",
-        java.nio.file.Files.createTempDirectory("graft_repl_ckpt").toString)
-      try q.processAllAvailable() finally q.stop()
-      down
-    })
-
   def qLedgerReplicate(spark: SparkSession, dir: String): DataFrame = {
     val down = builtReplica(spark, dir)
     readVersion(spark, down, latestVersion(spark, down))
@@ -2052,8 +2034,6 @@ object Ledger {
   private def occTableRoot(dir: String): String =
     graft.GraftPaths.sink("graft_ledger_occ", dir.replaceAll(".*/", ""))
 
-  private val occMemo = graft.StandingState.memo[(String, String), String]()
-
   /** v0 = the corpus; v1 = MERGE-ON-READ DELETE WHERE doc_id%7==3 (a
     * pending deletion vector, zero files moved); then TWO merges are
     * PREPARED concurrently against v1 — both copy-on-write rewrites
@@ -2065,8 +2045,8 @@ object Ledger {
     * staged vector stays sound) — and rebases to v3 without
     * recomputing its rewrite. Standing table, one build per
     * (session, corpus). */
-  private def builtOccLineage(spark: SparkSession, dir: String): String =
-    occMemo.getOrElseUpdate((spark.sparkContext.applicationId, dir), {
+  private[graft] def builtOccLineage(spark: SparkSession, dir: String): String =
+    graft.StandingState.standing(spark, "ledger-occ-lineage", dir) {
       val table = occTableRoot(dir)
       val docs = Tables.documents(spark, dir)
         .select(col("doc_id"), col("source"), col("text"))
@@ -2087,7 +2067,7 @@ object Ledger {
       require(commitPrepared(spark, table, b) == 2, "writer B claims v2")
       require(commitPrepared(spark, table, a) == 3, "writer A rebases to v3")
       table
-    })
+    }
 
   /** Q-ledger-occ: audit the head (v3) of the OCC lineage — count,
     * key checksum, text-fingerprint checksum, plus the version number
@@ -2131,21 +2111,18 @@ object Ledger {
     * them; recomputing the manifest-diff per consumer per tick would
     * multiply the diff cost by the subscriber count. Columns: op,
     * commit_version, key, payload. Feed-sized (changed keys only). */
-  private val fullFeedMemo = graft.StandingState.memo[(String, String), DataFrame]()
-
   private def stagedFullFeed(spark: SparkSession, table: String,
       dir: String, keyCol: String, upTo: Int): DataFrame =
-    // keyCol and upTo belong in the memo key: a caller asking for a
+    // keyCol and upTo belong in the key: a caller asking for a
     // different version range or key on the same table must not be
     // handed the first-staged feed
-    fullFeedMemo.getOrElseUpdate(
-      (spark.sparkContext.applicationId, s"$table@$dir#$keyCol..$upTo"), {
+    graft.StandingState.standing(spark, "ledger-full-feed", (table, dir, keyCol, upTo)) {
       import graft.StandingState.CkptOps
       (1 to upTo).map { v =>
         readChangesFull(spark, table, v - 1, v, keyCol)
           .withColumn("commit_version", lit(v))
       }.reduce(_.unionByName(_)).localCheckpointTracked()
-    })
+    }
 
   // ---- INCREMENTAL VIEW MAINTENANCE as a one-call API ----
 
@@ -2176,7 +2153,6 @@ object Ledger {
     new scala.collection.concurrent.TrieMap[String, ViewSpec]
   private val joinViewRegistry =
     new scala.collection.concurrent.TrieMap[String, JoinViewSpec]
-  private val viewBootMemo = graft.StandingState.memo[(String, String), DataFrame]()
 
   /** Register view `name` and build its BOOTSTRAP (the v0 aggregate)
     * as a standing artifact — once per (session, name); at 100 TB the
@@ -2215,14 +2191,14 @@ object Ledger {
 
   private def viewBootstrap(spark: SparkSession, name: String,
       spec: ViewSpec): DataFrame =
-    viewBootMemo.getOrElseUpdate((spark.sparkContext.applicationId, name), {
+    graft.StandingState.standing(spark, "ledger-view-bootstrap", name) {
       import graft.StandingState.CkptOps
       readVersion(spark, spec.table, 0)
         .groupBy(spec.groups.map { case (n, e) => e.as(n) }: _*)
         .agg(count(lit(1)).as(spec.countAs),
           spec.sums.map { case (n, e) => sum(e).as(n) }: _*)
         .localCheckpointTracked()
-    })
+    }
 
   /** REFRESH view `name`: bootstrap ∪ the staged full feed's signed
     * deltas (pre-images retract, post-images add), re-aggregated.
@@ -2317,10 +2293,8 @@ object Ledger {
           concat(lit("evo "), col("text")).as("text"), lit("xx").as("lang")))
   }
 
-  private val evoMemo = graft.StandingState.memo[(String, String), String]()
-
-  private def builtEvoLineage(spark: SparkSession, dir: String): String =
-    evoMemo.getOrElseUpdate((spark.sparkContext.applicationId, dir), {
+  private[graft] def builtEvoLineage(spark: SparkSession, dir: String): String =
+    graft.StandingState.standing(spark, "ledger-evo-lineage", dir) {
       val table = evoTableRoot(dir)
       val docs = Tables.documents(spark, dir)
         .select(col("doc_id"), col("source"), col("text"))
@@ -2330,7 +2304,7 @@ object Ledger {
       merge(spark, table, 1, evoChangeset(docs), "doc_id")
       compact(spark, table, 2, "doc_id")
       table
-    })
+    }
 
   /** Q-schema-evolution: v0 = the corpus (3 columns), v1 = METADATA-ONLY
     * ADD COLUMN lang (every v0 file carried by reference, nulls on
@@ -2388,10 +2362,8 @@ object Ledger {
           lit("upsert").as("op"), col("source"),
           concat(lit("dv "), col("text")).as("text")))
 
-  private val dvMemo = graft.StandingState.memo[(String, String), String]()
-
-  private def builtDvLineage(spark: SparkSession, dir: String): String =
-    dvMemo.getOrElseUpdate((spark.sparkContext.applicationId, dir), {
+  private[graft] def builtDvLineage(spark: SparkSession, dir: String): String =
+    graft.StandingState.standing(spark, "ledger-dv-lineage", dir) {
       val table = dvTableRoot(dir)
       val docs = Tables.documents(spark, dir)
         .select(col("doc_id"), col("source"), col("text"))
@@ -2400,7 +2372,7 @@ object Ledger {
       merge(spark, table, 1, dvChangeset(docs), "doc_id")
       compact(spark, table, 2, "doc_id")
       table
-    })
+    }
 
   /** Q-deletion-vectors: v0 = the corpus, v1 = MERGE-ON-READ DELETE
     * WHERE doc_id%5==2 (keys land in the deletion vector, zero data
@@ -2430,16 +2402,14 @@ object Ledger {
   private def zTableRoot(dir: String): String =
     graft.GraftPaths.sink("graft_ledger_z", dir.replaceAll(".*/", ""))
 
-  private val zMemo = graft.StandingState.memo[(String, String), String]()
-
   /** The z-ordered ledger table: v0 = events committed under a z-order
     * layout over (event_id, user_id) with user_id manifest stats —
     * `create(clusterBy = z, statCols = user_id)` — so BOTH dimensions
     * carry narrow per-file ranges; v1 = a merge-on-read DELETE (the
     * vector must compose with the pruned read path). Standing table,
     * one build per (session, corpus). */
-  private def builtZLineage(spark: SparkSession, dir: String): String =
-    zMemo.getOrElseUpdate((spark.sparkContext.applicationId, dir), {
+  private[graft] def builtZLineage(spark: SparkSession, dir: String): String =
+    graft.StandingState.standing(spark, "ledger-z-lineage", dir) {
       val table = zTableRoot(dir)
       val ev = Tables.events(spark, dir)
         .select(col("event_id"), col("user_id"),
@@ -2455,7 +2425,7 @@ object Ledger {
         clusterBy = Some(z), statCols = Seq("user_id"))
       deleteWhere(spark, table, 0, "event_id", col("event_id") % 101 === 7)
       table
-    })
+    }
 
   /** Q-ledger-zorder: a range lookup on the SECONDARY dimension
     * (user_id) of a z-ordered ledger version — the lookup the key-range
@@ -2479,41 +2449,15 @@ object Ledger {
 
   // ---- bloom-skipping point lookup over the shared lineage ----
 
-  private val skipMemo = graft.StandingState.memo[(String, String), String]()
-
   /** The shared lineage's bloom sidecar on `text`@v3, built once per
     * (session, corpus) — the standing-index discipline. */
-  private def builtSkipSidecar(spark: SparkSession, dir: String): String = {
+  private[graft] def builtSkipSidecar(spark: SparkSession, dir: String): String = {
     val table = builtLineage(spark, dir)
-    skipMemo.getOrElseUpdate((spark.sparkContext.applicationId, dir), {
+    graft.StandingState.standing(spark, "ledger-skip-sidecar", dir) {
       analyzeColumn(spark, table, 3, "text"); table
-    })
+    }
   }
 
-  /** Pre-build every standing ledger artifact for a corpus — the bench
-    * warmup hook. The lineages are write-once standing tables: at
-    * 100 TB the ledger EXISTS and queries ADDRESS versions, so the
-    * declared queries are timed against the read paths (time travel,
-    * CDF, conformed reads, bloom-pruned lookups), not against
-    * re-creating table history per pass. `StandingState.release()`
-    * still clears these between bench passes, bounding resident
-    * memory at one pass's accumulation. */
-  def warm(spark: SparkSession, dir: String): Unit = {
-    builtReplica(spark, dir) // builds the lineage + stages its CDF first
-    builtEvoLineage(spark, dir)
-    builtDvLineage(spark, dir)
-    builtSkipSidecar(spark, dir)
-    builtZLineage(spark, dir)
-    builtOccLineage(spark, dir)
-    builtWapLineage(spark, dir)
-    builtRebaseLineage(spark, dir)
-    builtDimLineage(spark, dir)
-    builtCkLineage(spark, dir)
-    builtBpLineage(spark, dir)
-    qLedgerIncrAgg(spark, dir).count()  // materializes the view bootstrap
-    qLedgerIncrJoin(spark, dir).count() // materializes the join-view partials
-    ()
-  }
 
   /** Q-ledger-skip: point lookup by TEXT — a non-key column on a
     * key-ranged layout, where the manifest's min/max prunes nothing —
@@ -2527,10 +2471,7 @@ object Ledger {
     * residual filter on both sides. The files-read subset itself is
     * layout-dependent and spec-pinned in LedgerSpec instead. */
   def qLedgerSkip(spark: SparkSession, dir: String): DataFrame = {
-    val table = builtLineage(spark, dir)
-    skipMemo.getOrElseUpdate((spark.sparkContext.applicationId, dir), {
-      analyzeColumn(spark, table, 3, "text"); table
-    })
+    val table = builtSkipSidecar(spark, dir)
     val lookups = Tables.documents(spark, dir)
       .filter(col("doc_id").isin(7L, 101L, 263L))
       .select(col("text")).collect().map(_.getString(0)).toSeq
@@ -2908,8 +2849,6 @@ object Ledger {
   private def wapTableRoot(dir: String): String =
     graft.GraftPaths.sink("graft_ledger_wap", dir.replaceAll(".*/", ""))
 
-  private val wapMemo = graft.StandingState.memo[(String, String), String]()
-
   /** The WAP lineage: v0 = the corpus; branch `bad` stages a changeset
     * that plants empty texts (doc_id%53==0 upserted to ""), its audit
     * FAILS (empty-text count > 0) and the branch is dropped — none of
@@ -2917,8 +2856,8 @@ object Ledger {
     * clones at +4e9 with a "wap " prefix, its audit passes (zero empty
     * texts) and publishes as parent v1. Standing table, one build per
     * (session, corpus). */
-  private def builtWapLineage(spark: SparkSession, dir: String): String =
-    wapMemo.getOrElseUpdate((spark.sparkContext.applicationId, dir), {
+  private[graft] def builtWapLineage(spark: SparkSession, dir: String): String =
+    graft.StandingState.standing(spark, "ledger-wap-lineage", dir) {
       val table = wapTableRoot(dir)
       val docs = Tables.documents(spark, dir)
         .select(col("doc_id"), col("source"), col("text"))
@@ -2941,7 +2880,7 @@ object Ledger {
         "the good branch must pass its audit")
       publish(spark, table, "good")
       table
-    })
+    }
 
   /** Q-ledger-wap: audit the WAP lineage's published head — version
     * number (1: the branch's commit became exactly one parent
@@ -2965,8 +2904,6 @@ object Ledger {
   private def rebaseTableRoot(dir: String): String =
     graft.GraftPaths.sink("graft_ledger_rebase", dir.replaceAll(".*/", ""))
 
-  private val rebaseMemo = graft.StandingState.memo[(String, String), String]()
-
   /** The REBASE lineage: v0 = the corpus; branch `hotfix` stages the
     * %37==0 clones at +5e9 with a "rebase " prefix while a DIRECT
     * parent commit lands v1 (the %29==0 docs re-texted "main " — the
@@ -2974,8 +2911,8 @@ object Ledger {
     * REBASES onto v1 (disjoint: the branch's inserts touch no base
     * file, the parent added no key above 5e9), then publishes as v2.
     * Standing table, one build per (session, corpus). */
-  private def builtRebaseLineage(spark: SparkSession, dir: String): String =
-    rebaseMemo.getOrElseUpdate((spark.sparkContext.applicationId, dir), {
+  private[graft] def builtRebaseLineage(spark: SparkSession, dir: String): String =
+    graft.StandingState.standing(spark, "ledger-rebase-lineage", dir) {
       val table = rebaseTableRoot(dir)
       val docs = Tables.documents(spark, dir)
         .select(col("doc_id"), col("source"), col("text"))
@@ -2998,7 +2935,7 @@ object Ledger {
       require(publish(spark, table, "hotfix") == 2,
         "the rebased branch must publish as parent v2")
       table
-    })
+    }
 
   /** Q-ledger-rebase: audit the rebase-then-publish head — the busy-
     * table WAP cycle ([[rebaseBranch]]): version number, row count,
@@ -3026,8 +2963,6 @@ object Ledger {
   private def dimTableRoot(dir: String): String =
     graft.GraftPaths.sink("graft_ledger_dim", dir.replaceAll(".*/", ""))
 
-  private val dimMemo = graft.StandingState.memo[(String, String), String]()
-
   /** Dim-side lineage for the join view — STRING-keyed on purpose (the
     * manifest range logic and copy-on-write must not assume numeric
     * keys): v0 = one row per distinct corpus source with weight =
@@ -3035,8 +2970,8 @@ object Ledger {
     * first codepoint is even; v2 = MERGE deleting the
     * lexicographically smallest source (a dim delete must retract
     * every joined row's contribution from the view). */
-  private def builtDimLineage(spark: SparkSession, dir: String): String =
-    dimMemo.getOrElseUpdate((spark.sparkContext.applicationId, dir), {
+  private[graft] def builtDimLineage(spark: SparkSession, dir: String): String =
+    graft.StandingState.standing(spark, "ledger-dim-lineage", dir) {
       val table = dimTableRoot(dir)
       val dims0 = Tables.documents(spark, dir).select(col("source")).distinct()
         .select(col("source"),
@@ -3052,7 +2987,7 @@ object Ledger {
         readVersion(spark, table, 1).filter(col("source") === mn)
           .select(col("source"), lit("delete").as("op"), col("weight")), "source")
       table
-    })
+    }
 
   /** Q-ledger-incr-join: INCREMENTAL maintenance of a JOIN view across
     * TWO independently-committing ledger tables — docs (the shared
@@ -3104,15 +3039,13 @@ object Ledger {
   private def ckTableRoot(dir: String): String =
     graft.GraftPaths.sink("graft_ledger_ck", dir.replaceAll(".*/", ""))
 
-  private val ckMemo = graft.StandingState.memo[(String, String), String]()
-
   /** The constraints lineage: CREATE with two CHECKs → one valid MERGE
     * → one REFUSED merge (mixed changeset: valid rows + negative
     * n_chars rows — atomicity means NOTHING from it lands) → one more
     * valid MERGE. Deterministic modular changesets like every other
     * ledger fixture. */
-  private def builtCkLineage(spark: SparkSession, dir: String): String =
-    ckMemo.getOrElseUpdate((spark.sparkContext.applicationId, dir), {
+  private[graft] def builtCkLineage(spark: SparkSession, dir: String): String =
+    graft.StandingState.standing(spark, "ledger-ck-lineage", dir) {
       val table = ckTableRoot(dir)
       val docs = Tables.documents(spark, dir)
         .select(col("doc_id"), col("lang"), col("n_chars"))
@@ -3160,14 +3093,12 @@ object Ledger {
             (col("n_chars") + 7L).as("n_chars")))
       merge(spark, table, 1, cs2, "doc_id")
       table
-    })
+    }
 
   // ----- Q-ledger-binpack fixtures -----
 
   private def bpTableRoot(dir: String): String =
     graft.GraftPaths.sink("graft_ledger_bp", dir.replaceAll(".*/", ""))
-
-  private val bpMemo = graft.StandingState.memo[(String, String), String]()
 
   /** The bin-pack lineage: one right-sized base file, two insert-only
     * merges that each land a small frontier file, then ONE
@@ -3175,8 +3106,8 @@ object Ledger {
     * files (target = half the corpus — scale-independent: the base
     * file is always right-sized, the modular-clone frontiers never
     * are) and carry the base by reference. */
-  private def builtBpLineage(spark: SparkSession, dir: String): String =
-    bpMemo.getOrElseUpdate((spark.sparkContext.applicationId, dir), {
+  private[graft] def builtBpLineage(spark: SparkSession, dir: String): String =
+    graft.StandingState.standing(spark, "ledger-bp-lineage", dir) {
       val table = bpTableRoot(dir)
       val docs = Tables.documents(spark, dir).select(col("doc_id"), col("text"))
       val n = docs.count()
@@ -3198,7 +3129,7 @@ object Ledger {
         .select("path").collect().map(_.getString(0)).toSet
       require(basePaths.subsetOf(after), "base file must carry by reference")
       table
-    })
+    }
 
   /** Q-ledger-binpack: incremental small-file compaction end to end —
     * the packed head must carry EXACTLY the logical content of the

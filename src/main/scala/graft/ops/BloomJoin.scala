@@ -42,8 +42,6 @@ object BloomJoin {
     * filter ~1.2 MB/M keys. */
   private val Fpp = 0.01
 
-  private val bloomMemo = graft.StandingState.memo[(String, String), BloomFilter]()
-
   /** The dim predicate under test: urgent orders from 2000 on (~5% of
     * orders, so ~95% of lineitems never reach the join exchange). */
   private def urgentRecent(o: DataFrame): DataFrame =
@@ -55,11 +53,11 @@ object BloomJoin {
     * per-partition blooms (`DataFrameStatFunctions.bloomFilter` is a
     * treeAggregate); the artifact is model-sized, never row-sized. */
   def builtOrderkeyBloom(spark: SparkSession, dir: String): BloomFilter =
-    bloomMemo.getOrElseUpdate((spark.sparkContext.applicationId, dir), {
+    graft.StandingState.standing(spark, "orderkey-bloom", dir) {
       val keys = urgentRecent(Tables.orders(spark, dir)).select(col("o_orderkey"))
       val n = math.max(keys.count(), 1000L)
       keys.stat.bloomFilter("o_orderkey", n, Fpp)
-    })
+    }
 
   /** Q-bloom-join: monthly revenue of urgent 2000+ orders, fact side
     * bloom-pruned before the shuffle. The exact equi-join (merge hint —

@@ -171,12 +171,6 @@ object Sink {
     (nBefore, nAfter)
   }
 
-  /** Declared compaction round trip: fragment events into 32 files per
-    * event-type partition, compact to one file per partition, and emit
-    * the per-type manifest (counts + exact checksums) from the
-    * COMPACTED files. Green iff compaction preserved every row. */
-  private val fragMemo = graft.StandingState.memo[(String, String), String]()
-
   /** The fragmented INPUT layout for [[qCompact]], built once per
     * (session, corpus): it is the deterministic fixture the compaction
     * operates ON (at 100 TB the small-file mess arrives from
@@ -185,15 +179,19 @@ object Sink {
     * `StandingState.release()` clears it like every standing artifact. */
   def warmCompactInput(spark: SparkSession, dir: String): String = {
     val tag = dir.replaceAll(".*/", "")
-    fragMemo.getOrElseUpdate((spark.sparkContext.applicationId, tag), {
+    graft.StandingState.standing(spark, "compact-input", tag) {
       val frag = graft.GraftPaths.sink("graft_compact", s"frag_$tag")
       Tables.events(spark, dir)
         .repartition(32)
         .write.mode("overwrite").partitionBy("event_type").parquet(frag)
       frag
-    })
+    }
   }
 
+  /** Declared compaction round trip: fragment events into 32 files per
+    * event-type partition, compact to one file per partition, and emit
+    * the per-type manifest (counts + exact checksums) from the
+    * COMPACTED files. Green iff compaction preserved every row. */
   def qCompact(spark: SparkSession, dir: String): DataFrame = {
     val tag = dir.replaceAll(".*/", "")
     val frag = warmCompactInput(spark, dir)

@@ -1,6 +1,5 @@
 package graft.text
 
-import scala.collection.concurrent.TrieMap
 import scala.collection.mutable
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -188,19 +187,17 @@ object Bpe {
     words.map(w => (w, encode(w, ranks).length.toLong))
   }
 
-  // ---- session-scoped artifact memo (same pattern as ivfCentroids) ----
-  private val memo = TrieMap.empty[String, Vector[(String, String)]]
-
   /** The merge list for queries: read from the fixture parquet (written
-    * once by [[graft.sources.Fixtures.ensure]]), memoized per app. */
+    * once by [[graft.sources.Fixtures.ensure]]), a standing artifact of
+    * the session (same pattern as ivfCentroids). */
   def merges(spark: SparkSession): Vector[(String, String)] =
-    memo.getOrElseUpdate(spark.sparkContext.applicationId, {
+    graft.StandingState.standing(spark, "bpe-merges", graft.sources.Fixtures.bpeMergesPath) {
       graft.sources.Fixtures.ensure(spark)
       spark.read.parquet(graft.sources.Fixtures.bpeMergesPath)
         .orderBy("rank").collect()
         .map(r => (r.getString(r.fieldIndex("left")), r.getString(r.fieldIndex("right"))))
         .toVector
-    })
+    }
 
   def ranks(spark: SparkSession): Map[(String, String), Int] =
     merges(spark).zipWithIndex.toMap

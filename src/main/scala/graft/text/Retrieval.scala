@@ -48,10 +48,8 @@ object Retrieval {
     * per (session, dir) as an eager localCheckpoint — doc-sized (one
     * row of 5 ints per doc), the same standing-index pattern the
     * minhash band table uses (dedup/Dedup.scala). */
-  private val byDocMemo = graft.StandingState.memo[(String, String), DataFrame]()
-
-  private def byDoc(spark: SparkSession, dir: String): DataFrame =
-    byDocMemo.getOrElseUpdate((spark.sparkContext.applicationId, dir), {
+  private[graft] def byDoc(spark: SparkSession, dir: String): DataFrame =
+    graft.StandingState.standing(spark, "bm25-doc-index", dir) {
       val tok = Tables.documents(spark, dir)
         .select(col("doc_id"), explode(tokens(col("text"))).as("term"))
       val tfCols = queryTerms.map(t =>
@@ -59,7 +57,7 @@ object Retrieval {
       tok.groupBy(col("doc_id"))
         .agg(count(lit(1)).as("dl"), tfCols: _*)
         .localCheckpointTracked()
-    })
+    }
 
   /** Per-(doc, query-term) postings with doc length and corpus stats
     * attached: columns doc_id, term, tf, dl, df, n, sdl. Built from
@@ -115,12 +113,6 @@ object Retrieval {
     val tfD = col("tf").cast("double")
     floor(lit(1e6) * (tfD * log(nD / dfD)) + lit(0.5)).cast("long")
   }
-
-  /** Pre-build the standing doc index (bench warmup hook): the
-    * localCheckpoint is eager, so one call materializes it. Queries
-    * then time the ranking read path, not index construction —
-    * `StandingState.release()` between bench passes still frees it. */
-  def warm(spark: SparkSession, dir: String): Unit = { byDoc(spark, dir); () }
 
   /** Q-bm25: top-10 documents for the fixed query under BM25
     * (k1=1.2, b=0.75). One corpus pass → posting-sized aggregation →

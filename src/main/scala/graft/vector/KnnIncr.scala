@@ -430,8 +430,6 @@ object KnnIncr {
   private def knnTableRoot(dir: String): String =
     graft.GraftPaths.sink("graft_ledger_knn", dir.replaceAll(".*/", ""))
 
-  private val lineageMemo = graft.StandingState.memo[(String, String), String]()
-
   /** Clone-id offset for the declared lineages: `max(vec_id) + 1`,
     * derived from the CORPUS (one memoized scalar) — a fixed literal
     * offset collides with real ids the moment the corpus outgrows it
@@ -453,7 +451,7 @@ object KnnIncr {
     * error, a missed pre-image, a stale bucket). Standing table, one
     * build per (session, corpus). */
   private def builtLineage(spark: SparkSession, dir: String): String =
-    lineageMemo.getOrElseUpdate((spark.sparkContext.applicationId, dir), {
+    graft.StandingState.standing(spark, "knn-incr-lineage", dir) {
       val table = knnTableRoot(dir)
       val off = cloneOffset(spark, dir)
       val emb = Tables.embeddings(spark, dir)
@@ -472,7 +470,7 @@ object KnnIncr {
         col("vec_id") % 17 === 3 && col("vec_id") < off)
       maintainedIndex(spark, table) // DV deletes drop rows + histogram mass
       table
-    })
+    }
 
   /** Q-knn-incr: the corpus-wide kNN join served from the CDF-MAINTAINED
     * index at the lineage's head. The oracle recomputes the final corpus
@@ -488,8 +486,6 @@ object KnnIncr {
   private def knnStreamTableRoot(dir: String): String =
     graft.GraftPaths.sink("graft_ledger_knns", dir.replaceAll(".*/", ""))
 
-  private val streamLineageMemo = graft.StandingState.memo[(String, String), String]()
-
   /** The SAME logical lineage as [[builtLineage]] (clone inserts →
     * reversal updates → DV deletes), but maintained by a LIVE
     * Structured Streaming subscription: bootstrap at v0, one batch
@@ -504,7 +500,7 @@ object KnnIncr {
     * breaks the hash at the gate. Standing table + subscription, one
     * build per (session, corpus). */
   private def builtStreamLineage(spark: SparkSession, dir: String): String =
-    streamLineageMemo.getOrElseUpdate((spark.sparkContext.applicationId, dir), {
+    graft.StandingState.standing(spark, "knn-stream-lineage", dir) {
       val table = knnStreamTableRoot(dir)
       val off = cloneOffset(spark, dir)
       val emb = Tables.embeddings(spark, dir)
@@ -527,7 +523,7 @@ object KnnIncr {
         q.processAllAvailable()
       } finally q.stop()
       table
-    })
+    }
 
   /** Q-knn-stream: the corpus-wide kNN join served from the index a
     * LIVE streaming subscription maintained — the declared form of

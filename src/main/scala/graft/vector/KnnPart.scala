@@ -83,8 +83,6 @@ object KnnPart {
     graft.StandingState.boundedMemo[(String, String, Int), PartEntry](
       () => partBudget,
       (_, e) => e.synchronized(e.handles).foreach(_.unpersist(blocking = false)))
-  private val partCountMemo =
-    graft.StandingState.memo[(String, String, Int), Long]()
 
   /** Test hook: the registry's live size and a value's persisted
     * handles (empty once evicted — their blocks are already released,
@@ -152,8 +150,7 @@ object KnnPart {
     * build-side pick and the dial both derive from it. */
   private[graft] def partitionCount(spark: SparkSession, dir: String,
       labelValue: Int): Long =
-    partCountMemo.getOrElseUpdate(
-      (spark.sparkContext.applicationId, dir, labelValue),
+    graft.StandingState.standing(spark, "knn-part-count", (dir, labelValue))(
       Tables.embeddings(spark, dir)
         .filter(col("label") === labelValue).count())
 
@@ -261,18 +258,6 @@ object KnnPart {
     }
   }
 
-  /** Bench warmup hook: build the standing partition index AND probe
-    * relation, so pass 1 times the serving join rather than standing-
-    * artifact setup (the same contract as the other warm() hooks). */
-  def warm(spark: SparkSession, dir: String): Unit = {
-    val (_, p0, maxD) = partitionIndex(spark, dir, 7)
-    partitionProbes(spark, dir, 7, p0, maxD)
-    // the served standing result too (r13) — pass 1 times the memo-served
-    // table, the same contract as KnnRouter.warm's branches
-    knnFilteredPartitioned(spark, dir, 7, 3)
-    ()
-  }
-
   /** Q-knn-filtered-part: [[knnFilteredPartitioned]] pinned at
     * `label = 7` — the cluster-valued predicate (the synthetic corpus'
     * labels ARE its embedding clusters, so this is exactly the
@@ -318,9 +303,6 @@ object KnnPart {
     * bound would bound the map, not the blocks. Output-sized frames
     * ride the session ledger and free at release(), like every other
     * handed-out result. */
-  private val servedMemo =
-    graft.StandingState.memo[(String, String, Int, Int), DataFrame]()
-
   def knnFilteredPartitioned(spark: SparkSession, dir: String,
       labelValue: Int, k: Int): DataFrame = {
     val nF = partitionCount(spark, dir, labelValue)
@@ -333,8 +315,7 @@ object KnnPart {
         partitionProbes(spark, dir, labelValue, p0, maxD), nQ, nF, k)
     } else {
       val key = (spark.sparkContext.applicationId, dir, labelValue)
-      servedMemo.getOrElseUpdate(
-        (spark.sparkContext.applicationId, dir, labelValue, k),
+      graft.StandingState.standing(spark, "knn-part-served", (dir, labelValue, k))(
         partRegistry.pinned(key)(
             entryBuild(spark, key, codedPartition(spark, dir, labelValue, maxD),
               p0, maxD)) { e =>
@@ -444,8 +425,6 @@ object KnnPart {
   private def knnPartTableRoot(dir: String): String =
     graft.GraftPaths.sink("graft_ledger_knnp", dir.replaceAll(".*/", ""))
 
-  private val partLineageMemo = graft.StandingState.memo[(String, String), String]()
-
   /** The maintained-PARTITION-trie lineage — q_knn_incr's shape plus
     * the cases only a partition index has: v0 = the labeled embeddings
     * corpus; v1 MERGES negated clones of the %13==0 vectors at
@@ -461,7 +440,7 @@ object KnnPart {
     * rebuild, so the from-scratch DuckDB oracle catches any
     * maintenance drift including a missed move direction. */
   private def builtPartLineage(spark: SparkSession, dir: String): String =
-    partLineageMemo.getOrElseUpdate((spark.sparkContext.applicationId, dir), {
+    graft.StandingState.standing(spark, "knn-part-lineage", dir) {
       val table = knnPartTableRoot(dir)
       val off = KnnIncr.cloneOffset(spark, dir)
       val emb = Tables.embeddings(spark, dir)
@@ -488,7 +467,7 @@ object KnnPart {
         col("vec_id") % 17 === 3 && col("vec_id") < off)
       KnnIncr.maintainedPartIndex(spark, table, 7) // DV deletes drop rows + mass
       table
-    })
+    }
 
   /** Q-knn-part-incr: the partitioned filtered kNN served from the
     * CDF-MAINTAINED label-7 trie at the lineage's head. The oracle

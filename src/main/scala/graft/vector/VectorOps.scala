@@ -1,7 +1,5 @@
 package graft.vector
 
-import scala.collection.concurrent.TrieMap
-
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -206,41 +204,25 @@ object VectorOps {
     }
 
   /** Mean-occupancy target; base depth p0 = floor(log2(ceil(n/target))).
-    * Overridable (-Dgraft.knn.target=N) ONLY for dial experiments —
-    * raising it drops base planes, buying recall with candidate volume
+    * Raising it drops base planes, buying recall with candidate volume
     * (the recall-vs-cost lever of the clustered-corpus study). */
-  val KnnTargetOcc: Long = sys.props.get("graft.knn.target").map(_.toLong).getOrElse(125L)
-  /** A cell splits one plane deeper while its occupancy exceeds this.
-    * Overridable (-Dgraft.knn.cap=N) ONLY for dial experiments — the
-    * recall/candidate-volume trade study in PERF.md; every declared
-    * path runs the default. */
-  val KnnCapOcc: Long = sys.props.get("graft.knn.cap").map(_.toLong).getOrElse(250L)
+  val KnnTargetOcc: Long = 125L
+  /** A cell splits one plane deeper while its occupancy exceeds this
+    * (the recall/candidate-volume trade study in PERF.md). */
+  val KnnCapOcc: Long = 250L
   /** Split budget past base depth (2^8× finer than base at the floor). */
   val KnnMaxExtra = 8
-  /** Multi-probe width: how many lowest-|margin| planes each query
-    * flips (each probe visits the flipped code's trie leaf). Default 1
-    * — the declared/oracle paths are byte-identical to the historical
-    * single-flip plan. Overridable (-Dgraft.knn.probes=P) for dial
-    * experiments: each extra probe targets the NEXT most likely
-    * disagreeing plane, the classic multi-probe LSH recall buy-back
-    * (Lv et al., VLDB'07) at ~one extra bucket of candidates per
-    * probe. */
-  val KnnProbes: Int = sys.props.get("graft.knn.probes").map(_.toInt).getOrElse(1)
-
-  private val embCountMemo = graft.StandingState.memo[(String, String), Long]()
 
   /** Memoized corpus cardinality — the scalar that sizes dials and
     * build-side picks (shared with [[KnnPart]]). */
   private[vector] def embCount(spark: SparkSession, dir: String): Long =
-    embCountMemo.getOrElseUpdate((spark.sparkContext.applicationId, dir),
+    graft.StandingState.standing(spark, "emb-count", dir)(
       Tables.embeddings(spark, dir).count())
-
-  private val embMaxIdMemo = graft.StandingState.memo[(String, String), Long]()
 
   /** `max(vec_id) + 1` — the clone-id offset the declared lineages use
     * (see [[KnnIncr.cloneOffset]]); memoized like [[embCount]]. */
   private[vector] def embMaxIdPlusOne(spark: SparkSession, dir: String): Long =
-    embMaxIdMemo.getOrElseUpdate((spark.sparkContext.applicationId, dir),
+    graft.StandingState.standing(spark, "emb-max-id", dir)(
       Tables.embeddings(spark, dir).agg(max(col("vec_id"))).head().getLong(0) + 1L)
 
   /** Leaf depths from a full-code histogram `(full, c)` — per-depth
@@ -271,9 +253,6 @@ object VectorOps {
     (p0 to maxD).map { d =>
       when(col("ld") === d, col("full").bitwiseAND(lit((1L << d) - 1)) + lit(1L << d))
     }.reduceRight(_.otherwise(_))
-  private val knnKeymapMemo = graft.StandingState.memo[(String, String), DataFrame]()
-  private val knnIndexMemo = graft.StandingState.memo[(String, String), (DataFrame, Int, Int)]()
-  private val knnLeafKeysMemo = graft.StandingState.memo[(String, String), DataFrame]()
 
   /** full-code → leaf-depth map (histogram-sized, memoized,
     * materialized): ONE corpus aggregate to the full-depth histogram,
@@ -281,12 +260,12 @@ object VectorOps {
     * histogram-sized work. */
   private def knnKeymap(spark: SparkSession, emb0: DataFrame,
       p0: Int, maxD: Int, dir: String): DataFrame =
-    knnKeymapMemo.getOrElseUpdate((spark.sparkContext.applicationId, dir), {
+    graft.StandingState.standing(spark, "knn-keymap", dir) {
       val h = emb0.groupBy(col("full")).agg(count(lit(1)).as("c"))
       val (km, _) = graft.dedup.Dedup.materializeStatsReset(
         leafDepthsFromHist(h, p0, maxD))
       km
-    })
+    }
 
   /** The indexed corpus: (vec_id, v, full, ld, bucket) under the
     * adaptive dial — shared by [[qKnnJoin]], the occupancy specs, and
@@ -297,9 +276,7 @@ object VectorOps {
     * (corpus + queries) — without materialization the scan + maxDepth
     * plane dots + keymap join execute twice per query. */
   private[graft] def knnIndexed(spark: SparkSession, dir: String): (DataFrame, Int, Int) = {
-    val n = embCountMemo.getOrElseUpdate((spark.sparkContext.applicationId, dir),
-      Tables.embeddings(spark, dir).count())
-    val (p0, maxD) = knnDialFor(n)
+    val (p0, maxD) = knnDialFor(embCount(spark, dir))
     val planes = hyperplanes(maxD, 64)
     // `label` rides in the index rows as the filterable PAYLOAD column
     // (the Qdrant/Vespa filtered-search shape: attributes queried
@@ -315,7 +292,7 @@ object VectorOps {
       .withColumn("full", lshBucket(col("v"), planes))
     if (p0 == maxD) // flat gate path: bucket = the 4-bit code itself
       (emb0.withColumn("ld", lit(p0)).withColumn("bucket", col("full")), p0, maxD)
-    else knnIndexMemo.getOrElseUpdate((spark.sparkContext.applicationId, dir), {
+    else graft.StandingState.standing(spark, "knn-index", dir) {
       val src = emb0
       // multi-probe flip bit — lowest-|margin| plane among the planes
       // this vector's leaf key uses — computed at INDEX BUILD time and
@@ -329,27 +306,12 @@ object VectorOps {
       val usable = slice(absDots, lit(1), col("ld"))
       val flipExpr = element_at(array((0 until maxD).map(p => lit(1L << p)): _*),
         array_position(usable, array_min(usable)).cast("int"))
-      val indexed0 = src.join(knnKeymap(spark, src, p0, maxD, dir), Seq("full"))
+      val indexed = src.join(knnKeymap(spark, src, p0, maxD, dir), Seq("full"))
         .withColumn("bucket", trieKeyExpr(p0, maxD))
         .withColumn("flip", flipExpr)
-      // multi-probe dial (> 1): ALSO store the ordered flip-bit array —
-      // the P lowest-|margin| usable planes, ascending margin with
-      // first-minimum tie-break (struct sort on (margin, index) —
-      // flips[0] ≡ flip). Default runs never compute it, keeping the
-      // standing artifact and plan byte-identical to the single-flip
-      // design.
-      val indexed =
-        if (KnnProbes <= 1) indexed0
-        else {
-          val pow2 = array((0 until maxD).map(p => lit(1L << p)): _*)
-          val idxd = transform(usable, (m, i) => struct(m.as("m"), i.as("i")))
-          val flipsExpr = transform(slice(array_sort(idxd), 1, KnnProbes),
-            s => element_at(pow2, s.getField("i").cast("int") + 1))
-          indexed0.withColumn("flips", flipsExpr)
-        }
       val (emb, _) = graft.dedup.Dedup.materializeStatsReset(indexed)
       (emb, p0, maxD)
-    })
+    }
   }
 
   /** The distinct trie-leaf key RELATION — ≈ n/125 rows, part of the
@@ -362,11 +324,11 @@ object VectorOps {
     * vectors it degrades to a shuffle of 16-byte (q_id, key) rows —
     * both fine, unlike a driver-resident InSet of 10^8 longs). */
   private def knnLeafKeysDf(spark: SparkSession, dir: String, emb: DataFrame): DataFrame =
-    knnLeafKeysMemo.getOrElseUpdate((spark.sparkContext.applicationId, dir), {
+    graft.StandingState.standing(spark, "knn-leaf-keys", dir) {
       val (df, _) = graft.dedup.Dedup.materializeStatsReset(
         emb.select(col("bucket").as("leaf_key")).distinct())
       df
-    })
+    }
 
   /** Dial-aware probe-QUERY relation `(q_id, qv, bucket)` — every
     * vector probing its own trie leaf plus its flip-bit neighbors;
@@ -406,39 +368,19 @@ object VectorOps {
     if (p0 == maxD)
       emb.select(col("vec_id").as("q_id"), col("v").as("qv"),
         explode(array(col("bucket"), probeFull)).as("bucket"))
-    else if (KnnProbes > 1) {
-        // multi-probe dial: one flipped code per stored flip bit, each
-        // resolved to its trie leaf. Distinct per (q_id, leaf): two
-        // flips can share a leaf ANCESTOR shallower than both flip
-        // depths, and a duplicate probe bucket would double-count its
-        // candidates into the top-k heap. A probe leaf can never equal
-        // the query's own bucket (the flip is below leaf depth, and
-        // the leaf set is prefix-free), so own+probes stay disjoint.
-        val pf = emb.select(col("vec_id").as("q_id"), col("full"),
-            explode(col("flips")).as("fb"))
-          .select(col("q_id"), col("full").bitwiseXOR(col("fb")).as("pfull"))
-        val cands = pf.select(col("q_id"), explode(array((p0 to maxD).map { d =>
-            col("pfull").bitwiseAND(lit((1L << d) - 1)) + lit(1L << d)
-          }: _*)).as("cand"))
-        val resolved = cands.join(knnLeafKeysDf(spark, dir, emb),
-            cands("cand") === col("leaf_key"))
-          .select(col("q_id"), col("cand").as("bucket")).distinct()
-        emb.select(col("vec_id").as("q_id"), col("v").as("qv"), col("bucket"))
-          .unionByName(emb.select(col("vec_id").as("q_id"), col("v").as("qv"))
-            .join(resolved, Seq("q_id")))
-      } else {
-        val cands = emb.select(col("vec_id").as("q_id"),
-          explode(array((p0 to maxD).map { d =>
-            probeFull.bitwiseAND(lit((1L << d) - 1)) + lit(1L << d)
-          }: _*)).as("cand"))
-        // prefix-freeness ⇒ at most one row per q_id survives
-        val resolved = cands.join(knnLeafKeysDf(spark, dir, emb),
-          cands("cand") === col("leaf_key")).select(col("q_id"), col("cand").as("probe_key"))
-        emb.select(col("vec_id").as("q_id"), col("v").as("qv"), col("bucket"))
-          .join(resolved, Seq("q_id"), "left")
-          .select(col("q_id"), col("qv"),
-            explode(array(col("bucket"), coalesce(col("probe_key"), lit(-1L)))).as("bucket"))
-      }
+    else {
+      val cands = emb.select(col("vec_id").as("q_id"),
+        explode(array((p0 to maxD).map { d =>
+          probeFull.bitwiseAND(lit((1L << d) - 1)) + lit(1L << d)
+        }: _*)).as("cand"))
+      // prefix-freeness ⇒ at most one row per q_id survives
+      val resolved = cands.join(knnLeafKeysDf(spark, dir, emb),
+        cands("cand") === col("leaf_key")).select(col("q_id"), col("cand").as("probe_key"))
+      emb.select(col("vec_id").as("q_id"), col("v").as("qv"), col("bucket"))
+        .join(resolved, Seq("q_id"), "left")
+        .select(col("q_id"), col("qv"),
+          explode(array(col("bucket"), coalesce(col("probe_key"), lit(-1L)))).as("bucket"))
+    }
   }
 
   def qKnnJoin(spark: SparkSession, dir: String, k: Int = 3): DataFrame = {
@@ -554,12 +496,10 @@ object VectorOps {
       .orderBy(col("q_id"), col("rn"))
   }
 
-  /** MULTI-PROBE kNN join with the probe width PINNED IN THE QUERY —
-    * the declared-oracle form of the `-Dgraft.knn.probes` dial: the r8
-    * clustered-corpus study measured the multi-probe lever as the
+  /** MULTI-PROBE kNN join with the probe width PINNED IN THE QUERY:
+    * the r8 clustered-corpus study measured the multi-probe lever as the
     * cheapest recall in the system (+0.12 recall@3 at ~zero wall at
-    * P=2), but a path living only behind a system property has no
-    * correctness gate and silently rots. This query IS that gate:
+    * P=2), and this query is its correctness gate:
     * P=2 as `q_knn_join_mp`, hash-matched against a DuckDB oracle that
     * mirrors the two-probe bucket union, while `probes=1` stays
     * row-identical to [[qKnnJoin]] (KnnDialSpec pins both).
@@ -570,25 +510,22 @@ object VectorOps {
     * first-minimum tie-break: the struct sort on (margin, index), so
     * probe 1 ≡ the single-probe flip). The flips array is computed in
     * a PROJECTION over the index (never inside the Generate — the
-    * janino method-split note at the index build applies), so default
-    * standing artifacts stay byte-identical whatever P callers pin. */
+    * janino method-split note at the index build applies), so the
+    * standing index stays the same whatever P callers pin. */
   def qKnnJoinMp(spark: SparkSession, dir: String, k: Int = 3,
       probes: Int = 2): DataFrame = {
     require(probes >= 1, s"probes must be >= 1, got $probes")
     val (emb, p0, maxD) = knnIndexed(spark, dir)
     val planes = hyperplanes(maxD, 64)
     val pow2 = array((0 until maxD).map(p => lit(1L << p)): _*)
-    def flipsOf(src: DataFrame): DataFrame =
-      if (src.columns.contains("flips") && KnnProbes >= probes)
-        src.withColumn("_flips", slice(col("flips"), 1, probes))
-      else {
-        val absDots = array(planes.map(r =>
-          abs(dot(col("v"), array(r.map(lit): _*)))): _*)
-        val usable = slice(absDots, lit(1), col("ld"))
-        val idxd = transform(usable, (m, i) => struct(m.as("m"), i.as("i")))
-        src.withColumn("_flips", transform(slice(array_sort(idxd), 1, probes),
-          s => element_at(pow2, s.getField("i").cast("int") + 1)))
-      }
+    def flipsOf(src: DataFrame): DataFrame = {
+      val absDots = array(planes.map(r =>
+        abs(dot(col("v"), array(r.map(lit): _*)))): _*)
+      val usable = slice(absDots, lit(1), col("ld"))
+      val idxd = transform(usable, (m, i) => struct(m.as("m"), i.as("i")))
+      src.withColumn("_flips", transform(slice(array_sort(idxd), 1, probes),
+        s => element_at(pow2, s.getField("i").cast("int") + 1)))
+    }
     val queries =
       if (p0 == maxD)
         // flat path: every p0-bit code is its own bucket — a flipped
@@ -642,21 +579,13 @@ object VectorOps {
     * and mutual-kNN chains can be path-like; each round is one join on
     * the edge table. Output: every vector in ≥1 mutual edge, labeled
     * by its component's min vec_id. */
-  /** Cluster labels memoized per (session, dir) as a localCheckpointed
-    * table — like [[ivfCentroids]], the mutual-kNN CC is a write-once
-    * batch artifact (a standing label table at 100 TB), so the curation
-    * composite must not re-run the kNN join + CC loop the clustering
-    * query already paid for. */
-  private val knnClusterMemo = graft.StandingState.memo[(String, String), DataFrame]()
-  private val knnMutualMemo = graft.StandingState.memo[(String, String), DataFrame]()
-
   /** Mutual-kNN edge table (a < b), memoized and materialized once per
     * (session, dir): the symmetrized graph is the shared input of the
     * CC clustering AND the centrality ranking below — like the IVF
     * centroids, a write-once batch artifact (a standing edge table at
     * 100 TB), so neither consumer re-pays the LSH self-join. */
   private[graft] def knnMutualEdges(spark: SparkSession, dir: String): DataFrame =
-    knnMutualMemo.getOrElseUpdate((spark.sparkContext.applicationId, dir), {
+    graft.StandingState.standing(spark, "knn-mutual-edges", dir) {
       // materialized (RDD checkpoint + stats reset): the k·n edge list
       // is consumed twice by the mutual-intersect (forward + reversed)
       // — execute the LSH join one time, and free its blocks once the
@@ -669,17 +598,22 @@ object VectorOps {
           .filter(col("a") < col("b")))
       fwdRdd.unpersist(blocking = false)
       mutual
-    })
+    }
 
+  /** Cluster labels memoized per (session, dir) as a localCheckpointed
+    * table — like [[ivfCentroids]], the mutual-kNN CC is a write-once
+    * batch artifact (a standing label table at 100 TB), so the curation
+    * composite must not re-run the kNN join + CC loop the clustering
+    * query already paid for. */
   private def knnClusterLabels(spark: SparkSession, dir: String): DataFrame =
-    knnClusterMemo.getOrElseUpdate((spark.sparkContext.applicationId, dir), {
+    graft.StandingState.standing(spark, "knn-cluster-labels", dir) {
       val (labels, _) = graft.dedup.Dedup.materializeStatsReset(
         graft.dedup.Dedup.dupClusters(
             knnMutualEdges(spark, dir)
               .select(col("a").as("doc_a"), col("b").as("doc_b")), maxIter = 100)
           .select(col("doc_id").as("vec_id"), col("cluster_id")))
       labels
-    })
+    }
 
   def qKnnClusters(spark: SparkSession, dir: String): DataFrame =
     knnClusterLabels(spark, dir).orderBy(col("vec_id"))
@@ -862,10 +796,8 @@ object VectorOps {
     * parquet artifact), so the declared ANN query must not pay the
     * full-corpus aggregation on every execution. Decimal element sums
     * keep the means deterministic and oracle-reproducible. */
-  private val centroidMemo = graft.StandingState.memo[(String, String), DataFrame]()
-
   def ivfCentroids(spark: SparkSession, dir: String): DataFrame =
-    centroidMemo.getOrElseUpdate((spark.sparkContext.applicationId, dir), {
+    graft.StandingState.standing(spark, "ivf-centroids", dir) {
       import graft.ops.Exact._
       val emb = Tables.embeddings(spark, dir)
         .select(col("label"), col("embedding").cast("array<double>").as("v"))
@@ -876,7 +808,7 @@ object VectorOps {
         .agg(array_sort(collect_list(struct(col("pos"), col("m")))).as("pm"))
         .select(col("label").as("c_label"), transform(col("pm"), p => p.getField("m")).as("cv"))
         .localCheckpointTracked()
-    })
+    }
 
   /** IVF-style ANN — inverted lists keyed by `label` (standing in for
     * k-means cell ids; the clustering step is a one-off batch job at
@@ -1104,14 +1036,12 @@ object VectorOps {
     * memoized, the query times ENCODING + ADC SERVING against the
     * standing codebook, the shape a deployment actually runs. Released
     * and lazily rebuilt with every other standing artifact. */
-  private val pqRefinedMemo = graft.StandingState.memo[(String, String), DataFrame]()
-
   def refinedPqCodebooks(spark: SparkSession, dir: String): DataFrame =
-    pqRefinedMemo.getOrElseUpdate((spark.sparkContext.applicationId, dir), {
+    graft.StandingState.standing(spark, "pq-codebooks", dir) {
       val emb = Tables.embeddings(spark, dir)
         .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
       refinePqCodebooks(emb, ivfCentroids(spark, dir))
-    })
+    }
 
   def qSimPqRefined(spark: SparkSession, dir: String, nQueries: Int = 5, k: Int = 3): DataFrame = {
     val emb = Tables.embeddings(spark, dir)

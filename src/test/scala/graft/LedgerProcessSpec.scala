@@ -17,21 +17,22 @@ import graft.etl.Ledger
   * coordination file under a cross-process FileLock) — are raced here
   * by child JVMs of [[LedgerProcessWriter]] committing disjoint
   * prepared merges on one table, and must keep the serializability
-  * law. A third case stops a session and reads the same version from
-  * a fresh one, which is only possible in a JVM of its own: the suite
-  * shares one session. */
+  * law. A third case stops a session and reads the same version, and
+  * one query per standing-artifact family, from a fresh one, which is
+  * only possible in a JVM of its own: the suite shares one session. */
 class LedgerProcessSpec extends AnyFunSuite {
   import SparkFixture.spark
 
   private val nWriters = 3
 
-  /** Run `main` in a child JVM on this JVM's classpath; (exit code, output). */
-  private def fork(main: String, args: String*): (Int, String) = {
+  /** Run `main` in a child JVM on this JVM's classpath, with extra JVM
+    * options `jvm`; (exit code, output). */
+  private def fork(main: String, args: Seq[String], jvm: Seq[String] = Nil): (Int, String) = {
     val javaBin = System.getProperty("java.home") + "/bin/java"
     val opens = Seq("java.lang", "java.lang.invoke", "java.nio", "java.util",
       "java.util.concurrent", "sun.nio.ch", "sun.util.calendar", "sun.security.action")
       .flatMap(p => Seq("--add-opens", s"java.base/$p=ALL-UNNAMED"))
-    val pb = new ProcessBuilder((Seq(javaBin, "-Xmx1g") ++ opens ++
+    val pb = new ProcessBuilder((Seq(javaBin, "-Xmx1g") ++ opens ++ jvm ++
       Seq("-cp", System.getProperty("java.class.path"), main) ++ args): _*)
     pb.redirectErrorStream(true)
     val p = pb.start()
@@ -48,7 +49,7 @@ class LedgerProcessSpec extends AnyFunSuite {
       Ledger.create(spark, t, docs, "doc_id", nFiles = 8)
 
       val writers = (0 until nWriters).map { i =>
-        i -> scala.concurrent.Future(fork("graft.LedgerProcessWriter", t, i.toString, store))(
+        i -> scala.concurrent.Future(fork("graft.LedgerProcessWriter", Seq(t, i.toString, store)))(
           scala.concurrent.ExecutionContext.global)
       }
       val versions = writers.map { case (i, f) =>
@@ -85,9 +86,23 @@ class LedgerProcessSpec extends AnyFunSuite {
     }
 
   test("a new session reads a version an earlier, stopped session read") {
-    val (rc, out) = fork("graft.LedgerSessionSwap", Ledger.tableRoot("ledger_proc_swap"))
+    // the child writes its lineages and layouts under its own sink root,
+    // so it never rewrites a table this JVM's session has registered
+    val sinkRoot = new java.io.File("target/graft_swap_sink").getAbsolutePath
+    val (rc, out) = fork("graft.LedgerSessionSwap",
+      Seq(Ledger.tableRoot("ledger_proc_swap"), SparkFixture.sf),
+      Seq(s"-Dgraft.sink.root=$sinkRoot"))
     assert(rc == 0, s"session swap failed (rc=$rc):\n${out.takeRight(4000)}")
     assert(out.linesIterator.contains("SWAP rows=390/390"), out.takeRight(4000))
+    // one query per standing family: the rows a fresh session serves
+    // equal the rows the stopped session served
+    for (q <- LedgerSessionSwap.familyQueries) {
+      val line = out.linesIterator.find(_.startsWith(s"SWAP $q ")).getOrElse(
+        fail(s"no swap line for $q:\n${out.takeRight(4000)}"))
+      val Array(_, _, rows, same) = line.split(" ")
+      assert(rows.stripPrefix("rows=").toInt > 0, line)
+      assert(same == "same=true", line)
+    }
   }
 }
 
@@ -131,22 +146,37 @@ object LedgerProcessWriter {
   }
 }
 
-/** `<table>`: commit a merge-on-read delete, read that version, stop the
-  * session, start a new one and read the same version again. Prints
-  * `SWAP rows=<first>/<second>`. */
+/** `<table> <corpus dir>`: commit a merge-on-read delete, read that
+  * version, stop the session, start a new one and read the same version
+  * again. Prints `SWAP rows=<first>/<second>`. Then the same for one
+  * declared query per standing-artifact family over the corpus: each
+  * runs in the first session and again in the second, and prints
+  * `SWAP <query> rows=<n> same=<rows equal>`. */
 object LedgerSessionSwap {
+  /** ledger, dedup, vector (two), text, ops (two). */
+  val familyQueries = Seq("q_ledger_skip", "q_dup_clusters", "q_sim_ivf",
+    "q_knn_clusters", "q_bm25", "q_bloom_join", "q_compact")
+
+  private def rows(spark: SparkSession, dir: String): Map[String, Seq[String]] =
+    familyQueries.map(q =>
+      q -> SparkEntry.queries(q)(spark, dir).collect().map(_.toString).toSeq).toMap
+
   def main(args: Array[String]): Unit = {
-    val table = args(0)
+    val Array(table, dir) = args.take(2)
     val first = LedgerProcessSession("ledger_swap")
     import first.implicits._
     Ledger.create(first, table,
       (0L until 400L).map(i => (i, s"doc $i")).toDF("doc_id", "text"), "doc_id", nFiles = 4)
     Ledger.deleteWhere(first, table, 0, "doc_id", col("doc_id") < 10)
     val before = Ledger.readVersion(first, table, 1).count()
+    val rowsA = rows(first, dir)
     first.stop()
     val second = LedgerProcessSession("ledger_swap")
     val after = Ledger.readVersion(second, table, 1).count()
+    val rowsB = rows(second, dir)
     println(s"SWAP rows=$before/$after")
+    for (q <- familyQueries)
+      println(s"SWAP $q rows=${rowsA(q).size} same=${rowsA(q) == rowsB(q)}")
     second.stop()
   }
 }

@@ -21,4 +21,24 @@ class ToolsSpec extends AnyFunSuite {
     }
     assert(missing.isEmpty, s"scripts name classes that do not exist: ${missing.toSeq}")
   }
+
+  /** The standing registry casts a value by its name, so one name must
+    * never be registered with two types: every name is a literal that
+    * appears at exactly one call site. */
+  test("every StandingState.standing name is a literal used at one call site") {
+    def scalaFiles(d: java.io.File): Seq[java.io.File] =
+      d.listFiles().toSeq.flatMap(f =>
+        if (f.isDirectory) scalaFiles(f) else if (f.getName.endsWith(".scala")) Seq(f) else Nil)
+    val calls = scalaFiles(new java.io.File("src/main")).flatMap { f =>
+      val src = scala.io.Source.fromFile(f, "UTF-8")
+      val text = try src.mkString finally src.close()
+      """StandingState\.standing\(\s*\w+\s*,\s*([^,]*),""".r.findAllMatchIn(text)
+        .map(m => f.getName -> m.group(1).trim).toSeq
+    }
+    assert(calls.size >= 30, s"scan found too little: $calls")
+    val nonLiteral = calls.filterNot { case (_, n) => n.matches("\"[a-z0-9-]+\"") }
+    assert(nonLiteral.isEmpty, s"standing names must be string literals: $nonLiteral")
+    val reused = calls.groupBy(_._2).filter(_._2.size > 1)
+    assert(reused.isEmpty, s"standing names used at more than one call site: $reused")
+  }
 }
