@@ -4,7 +4,7 @@ import scala.collection.concurrent.TrieMap
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 
 /** Session-scoped ledger of the engine's standing artifacts — every
   * localCheckpointed RDD/Dataset and every built index, lineage, label
@@ -63,7 +63,7 @@ object StandingState {
     registry.getOrElseUpdate((spark.sparkContext.applicationId, name, scope), build)
       .asInstanceOf[V]
 
-  /** Track a localCheckpointed RDD (the materializeStatsReset path). */
+  /** Track a localCheckpointed RDD (the [[materializeStatsReset]] path). */
   private[graft] def trackRdd[T](rdd: RDD[T]): RDD[T] = { rddLedger.add(rdd); rdd }
 
   /** Track a `Dataset.localCheckpoint()` result: the persisted blocks
@@ -83,6 +83,26 @@ object StandingState {
     * Every engine call site uses this instead of the raw method. */
   private[graft] implicit class CkptOps(private val df: DataFrame) extends AnyVal {
     def localCheckpointTracked(): DataFrame = trackCheckpointed(df.localCheckpoint())
+  }
+
+  /** Materialize a small iteration table AND reset its plan statistics.
+    * `Dataset.localCheckpoint` copies the origin plan's estimated
+    * `sizeInBytes` into the resulting `LogicalRDD` — and join
+    * estimates MULTIPLY child sizes, so inside an iterative join loop
+    * the carried estimate squares every round. By ~iteration 15 the
+    * BigInt behind the estimate has tens of thousands of bits and the
+    * driver spends exponentially growing CPU in `BigInteger.multiply`
+    * during planning (measured: 0.3 s rounds become 80 s by round 22).
+    * Rebuilding the DataFrame from the checkpointed RDD drops the
+    * inherited stats back to defaults, keeping every round's planning
+    * O(1); the Row round-trip is irrelevant on id-pair-sized tables.
+    * The checkpointed RDD is tracked, so [[release]] frees it. */
+  private[graft] def materializeStatsReset(df: DataFrame): (DataFrame, RDD[Row]) = {
+    val rdd = df.rdd
+    rdd.localCheckpoint()
+    rdd.count()
+    trackRdd(rdd)
+    (df.sparkSession.createDataFrame(rdd, df.schema), rdd)
   }
 
   /** A VERSION-STAMPED memo for standing artifacts over MUTABLE tables

@@ -257,35 +257,16 @@ object Dedup {
     * iterations; dup clusters are shallow so this is 2-4 rounds in
     * practice. This is the step that turns pair detection into the
     * dedup deliverable: one canonical doc per duplicate cluster. */
-  /** Materialize a small iteration table AND reset its plan statistics.
-    * `Dataset.localCheckpoint` copies the origin plan's estimated
-    * `sizeInBytes` into the resulting `LogicalRDD` — and join
-    * estimates MULTIPLY child sizes, so inside an iterative join loop
-    * the carried estimate squares every round. By ~iteration 15 the
-    * BigInt behind the estimate has tens of thousands of bits and the
-    * driver spends exponentially growing CPU in `BigInteger.multiply`
-    * during planning (measured: 0.3 s rounds become 80 s by round 22).
-    * Rebuilding the DataFrame from the checkpointed RDD drops the
-    * inherited stats back to defaults, keeping every round's planning
-    * O(1); the Row round-trip is irrelevant on id-pair-sized tables. */
-  private[graft] def materializeStatsReset(df: DataFrame): (DataFrame, org.apache.spark.rdd.RDD[org.apache.spark.sql.Row]) = {
-    val rdd = df.rdd
-    rdd.localCheckpoint()
-    rdd.count()
-    graft.StandingState.trackRdd(rdd)
-    (df.sparkSession.createDataFrame(rdd, df.schema), rdd)
-  }
-
   def dupClusters(pairs: DataFrame, maxIter: Int = 20): DataFrame = {
     // materialized once: (a) the upstream pair pipeline executes one
     // time, (b) lineage truncates so each iteration plans against
     // checkpointed blocks instead of a growing DAG. The label table
     // holds only docs that appear in some pair — tiny relative to the
     // corpus at any scale.
-    val (edges, _) = materializeStatsReset(
+    val (edges, _) = graft.StandingState.materializeStatsReset(
       pairs.select(col("doc_a").as("u"), col("doc_b").as("v"))
         .union(pairs.select(col("doc_b").as("u"), col("doc_a").as("v"))))
-    var (labels, labelsRdd) = materializeStatsReset(
+    var (labels, labelsRdd) = graft.StandingState.materializeStatsReset(
       edges.select(col("u")).distinct().withColumn("label", col("u")))
     var iter = 0
     var converged = false
@@ -325,8 +306,8 @@ object Dedup {
         Iterator.single(c)
       }.fold(0L)(_ + _)
       graft.StandingState.trackRdd(nextRdd)
-      // rebuild from the checkpointed RDD: stats reset to defaults
-      // (see materializeStatsReset's scaladoc), old column dropped
+      // rebuild from the checkpointed RDD: stats reset to defaults (see
+      // StandingState.materializeStatsReset's scaladoc), old column dropped
       val next = nextWide.sparkSession.createDataFrame(nextRdd, nextWide.schema)
         .select(col("u"), col("label"))
       // free the superseded round's checkpoint blocks — `next` is

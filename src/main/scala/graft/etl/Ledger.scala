@@ -17,10 +17,15 @@ import graft.Tables
   * parquet manifest per VERSION:
   *
   * {{{
-  *   <table>/data/v<N>/part-*.parquet      -- files added by commit N
-  *   <table>/_manifest/v<N>/               -- parquet rows: one per
-  *     (path, min_key, max_key, rows)         live data file @ version N
+  *   <table>/data/v<N>/part-*.parquet        -- files added by commit N
+  *   <table>/data/c<commitId>/part-*.parquet -- files added by a merge
+  *   <table>/_manifest/v<N>/                 -- parquet rows: one per
+  *     (path, min_key, max_key, rows)           live data file @ version N
   * }}}
+  *
+  * Create and compactions write under the version they commit; a
+  * merge stages its rewrite under a commit id before it knows which
+  * version it will claim ([[prepareMerge]], [[commitPrepared]]).
   *
   * Every write is a new manifest that REFERENCES files — never mutates
   * them — so any historical version stays readable forever (until
@@ -243,6 +248,15 @@ object Ledger {
       readConformed(spark, table, version, paths.toIndexedSeq))
   }
 
+  /** The live rows of version N held in `paths` (a subset of its
+    * manifest): conformed to the version's schema, through its deletion
+    * vector. No paths = a zero-row frame with the version's schema. */
+  private def readFiles(spark: SparkSession, table: String, version: Int,
+      paths: Seq[String]): DataFrame =
+    if (paths.isEmpty) readVersion(spark, table, version).limit(0)
+    else applyDv(spark, table, version,
+      readConformed(spark, table, version, paths.toIndexedSeq))
+
   /** Manifest-level data skipping: the live files of version N whose
     * key range intersects [lo, hi] — the file list a predicate read
     * touches (O(manifest) work, zero data I/O; spec-pinned). */
@@ -271,13 +285,9 @@ object Ledger {
     * vector. The secondary-dimension read path of a z-ordered ledger
     * table. */
   def readWhereRange(spark: SparkSession, table: String, version: Int,
-      column: String, lo: Long, hi: Long): DataFrame = {
-    val cand = pruneFilesBy(spark, table, version, column, lo, hi)
-    if (cand.isEmpty) readVersion(spark, table, version).limit(0)
-    else applyDv(spark, table, version,
-        readConformed(spark, table, version, cand.toIndexedSeq))
+      column: String, lo: Long, hi: Long): DataFrame =
+    readFiles(spark, table, version, pruneFilesBy(spark, table, version, column, lo, hi))
       .filter(col(column).between(lo, hi))
-  }
 
   /** CREATE: version 0 from `df`, range-layout into `nFiles` files so
     * the per-file key ranges are disjoint and pruning/copy-on-write
@@ -365,7 +375,8 @@ object Ledger {
   }
 
   /** Carry version N's schema sidecar (if any) forward to version N+1
-    * — merge and compact change DATA, never the logical schema. */
+    * — deletes, compactions and constraint commits never change the
+    * logical schema (a merge carries it through [[commitPrepared]]). */
   private def carrySchema(spark: SparkSession, table: String,
       fromVersion: Int, version: Int): Unit =
     schemaOf(spark, table, fromVersion)
@@ -513,70 +524,22 @@ object Ledger {
     * {upsert, delete}. Files whose key range intersects no change key
     * carry over BY REFERENCE; intersected files are re-read, full-outer
     * joined with the changeset, and rewritten; change keys matching no
-    * existing file range become inserts in the rewrite. Produces
-    * version `fromVersion + 1`. PRECONDITION (checked): changeset keys
-    * are UNIQUE and non-null (the standard MERGE contract — Delta
-    * likewise rejects a source row matching twice); a key carrying two
-    * ops would fan out in the full-outer join, so the guard fails
-    * loudly instead. */
+    * existing file range become inserts in the rewrite. PRECONDITION
+    * (checked): changeset keys are UNIQUE and non-null (the standard
+    * MERGE contract — Delta likewise rejects a source row matching
+    * twice); a key carrying two ops would fan out in the full-outer
+    * join, so the guard fails loudly instead.
+    *
+    * One MERGE path: the rewrite is [[prepareMerge]] against
+    * `fromVersion`, the publish is [[commitPrepared]], so every merge
+    * CLAIMS its version. Alone on the table it commits
+    * `fromVersion + 1`; a second writer from the same base rebases past
+    * a disjoint interleaved commit or aborts with
+    * ConcurrentModificationException, never overwrites. Returns the
+    * committed version. */
   def merge(spark: SparkSession, table: String, fromVersion: Int,
-      changes: DataFrame, keyCol: String): Unit = {
-    val version = fromVersion + 1
-    requireUniqueKeys(changes, keyCol)
-    enforceOnChanges(spark, table, fromVersion, changes, keyCol)
-    val m = manifest(spark, table, fromVersion)
-    // file-count-sized × changeset range join: which files does any
-    // change key hit? (broadcast the manifest — it is model-sized)
-    val hit = changes.select(col(keyCol).as("ck")).distinct()
-      .join(broadcast(m), col("ck") >= col("min_key") && col("ck") <= col("max_key"))
-      .select(col("path")).distinct().collect().map(_.getString(0)).toSet
-    val carried = m.filter(!col("path").isInCollection(hit.toSeq :+ ""))
-    val existing =
-      if (hit.isEmpty) readVersion(spark, table, fromVersion).limit(0)
-      else applyDv(spark, table, fromVersion,
-        readConformed(spark, table, fromVersion, hit.toIndexedSeq))
-    // payload = every non-key, non-op column; upsert takes the change
-    // side, carried-through rows keep their own values
-    val payload = changes.columns.filterNot(c => c == keyCol || c == "op").toSeq
-    val ch = changes.select((col(keyCol) +: col("op") +:
-      payload.map(c => col(c).as(s"_$c"))): _*)
-    val merged = existing.join(ch, Seq(keyCol), "full_outer")
-      .filter(col("op").isNull || col("op") =!= "delete")
-      .select((col(keyCol) +: payload.map(c =>
-        when(col("op") === "upsert", col(s"_$c")).otherwise(col(c)).as(c))): _*)
-    // rewritten files recompute whatever stat columns the table was
-    // created with (z-dim min/max survive churn; values come from the
-    // actual rewritten rows, so they stay exact even though a key-
-    // ranged rewrite loosens z locality — compaction restores it)
-    val rewritten = writeDataFiles(spark,
-      merged.repartitionByRange(math.max(1, hit.size), col(keyCol)),
-      table, version, keyCol, statColsOf(m))
-    // deletion-vector bookkeeping: release a DV key only if it was
-    // PHYSICALLY APPLIED — its row lives in a hit file (the rewrite
-    // read through the vector, so the row is gone from the new files)
-    // or the changeset resolved it (a re-upsert of a DV-deleted key
-    // must become visible again; a merge-delete is now materialized).
-    // Range containment is NOT membership: merges can produce
-    // OVERLAPPING file ranges (a far insert widens a rewritten file's
-    // span across carried files), and the earlier release-by-hit-range
-    // logic would drop a DV key hiding in a carried file that merely
-    // falls inside an overlapping hit file's range — silently
-    // resurrecting the deleted row. Membership is checked against the
-    // keys actually present in the hit files: changed-files-sized I/O
-    // (the same files the rewrite just read), key column only.
-    deletionVector(spark, table, fromVersion).foreach { d =>
-      val k = d.columns.head
-      val hitKeys =
-        if (hit.isEmpty) d.limit(0)
-        else readConformed(spark, table, fromVersion, hit.toIndexedSeq)
-          .select(col(keyCol).as(k))
-      d.join(hitKeys, Seq(k), "left_anti")
-        .join(changes.select(col(keyCol).as(k)).distinct(), Seq(k), "left_anti")
-        .write.mode("overwrite").parquet(deletePath(table, version))
-    }
-    carrySchema(spark, table, fromVersion, version)
-    writeManifest(spark, table, version, carried.unionByName(rewritten))
-  }
+      changes: DataFrame, keyCol: String): Int =
+    commitPrepared(spark, table, prepareMerge(spark, table, fromVersion, changes, keyCol))
 
   /** COMPACT: rewrite version N's file layout into `nFiles` range-
     * partitioned files under version N+1 — logical content IDENTICAL
@@ -620,7 +583,7 @@ object Ledger {
     * selected files are read ONCE — raw, file-tagged, materialized —
     * and the exact live counts, the packed content (hidden rows
     * physically applied), and the released DV key set all derive from
-    * that single read ([[merge]]'s membership discipline; keys hiding
+    * that single read ([[prepareMerge]]'s membership discipline; keys hiding
     * in carried files stay in the vector). `clusterBy` packs into the
     * table's alternative layout — on a z-ordered table pass the same
     * z expression the table was created with, so routine bin-pack
@@ -665,7 +628,7 @@ object Ledger {
     // ONE read of the candidate files — raw (through no DV), tagged
     // with the source file, materialized: per-file live counts, the
     // packed content, and the released DV key set all derive from it.
-    val (raw, rawRdd) = graft.dedup.Dedup.materializeStatsReset(
+    val (raw, rawRdd) = graft.StandingState.materializeStatsReset(
       readConformed(spark, table, fromVersion, cand.toIndexedSeq)
         .withColumn("_file", input_file_name()))
     try {
@@ -715,13 +678,6 @@ object Ledger {
     } finally rawRdd.unpersist(blocking = false)
   }
 
-  /** Latest COMMITTED version — highest v<N> manifest directory whose
-    * `_SUCCESS` marker landed. The marker gate is what makes crash
-    * recovery work: a committer that died mid-manifest-write leaves a
-    * partial v<N> dir, and counting it would wedge [[commitBatch]]'s
-    * replay forever (`latestVersion == version` with the commit point
-    * absent). Treating marker-less manifests as nonexistent lets the
-    * replay recompute and overwrite the partial dir in place. */
   /** Whether version N is still COMMITTED AND READABLE — its manifest
     * (with the `_SUCCESS` commit marker) survives. [[vacuum]] drops
     * expired manifests, so a maintainer holding a version number from
@@ -732,6 +688,13 @@ object Ledger {
     version >= 0 &&
       fs(spark, table).exists(new Path(manifestPath(table, version) + "/_SUCCESS"))
 
+  /** Latest COMMITTED version — highest v<N> manifest directory whose
+    * `_SUCCESS` marker landed. The marker gate is what makes crash
+    * recovery work: a committer that died mid-manifest-write leaves a
+    * partial v<N> dir, and counting it would wedge [[commitBatch]]'s
+    * replay forever (`latestVersion == version` with the commit point
+    * absent). Treating marker-less manifests as nonexistent lets the
+    * replay recompute and overwrite the partial dir in place. */
   def latestVersion(spark: SparkSession, table: String): Int = {
     val dir = new Path(s"$table/_manifest")
     val f = fs(spark, table)
@@ -981,13 +944,9 @@ object Ledger {
     * a non-layout column reads a couple of files instead of the table.
     * Exact (the residual filter removes bloom false positives). */
   def readWhereIn(spark: SparkSession, table: String, version: Int,
-      column: String, values: Seq[Any]): DataFrame = {
-    val cand = pruneFilesByValue(spark, table, version, column, values)
-    if (cand.isEmpty) readVersion(spark, table, version).limit(0)
-    else applyDv(spark, table, version,
-        readConformed(spark, table, version, cand.toIndexedSeq))
+      column: String, values: Seq[Any]): DataFrame =
+    readFiles(spark, table, version, pruneFilesByValue(spark, table, version, column, values))
       .filter(col(column).isInCollection(values))
-  }
 
   // ---- optimistic concurrency (multi-writer commits) ----
 
@@ -1053,12 +1012,12 @@ object Ledger {
       stagedDv: Option[String], baseSchemaDdl: Option[String],
       commitId: String)
 
-  /** Phase 1 of an optimistic MERGE: compute the copy-on-write rewrite
-    * against `fromVersion` and stage its outputs, claiming nothing.
-    * Identical merge semantics to [[merge]] (unique changeset keys,
-    * upsert/delete ops, membership-based deletion-vector release);
-    * unlike [[merge]] it may run CONCURRENTLY with other writers —
-    * conflicts surface at [[commitPrepared]]. A base carrying a pending
+  /** Phase 1 of a MERGE ([[merge]] is this plus [[commitPrepared]]):
+    * compute the copy-on-write rewrite against `fromVersion` and stage
+    * its outputs, claiming nothing (unique changeset keys, upsert/delete
+    * ops, membership-based deletion-vector release). It may run
+    * CONCURRENTLY with other writers — conflicts surface at
+    * [[commitPrepared]]. A base carrying a pending
     * deletion vector is supported: the rewrite reads THROUGH the
     * vector (hidden rows never resurrect), and the successor vector
     * (base DV minus physically-applied minus changeset-resolved keys)
@@ -1076,13 +1035,14 @@ object Ledger {
     val commitId = java.util.UUID.randomUUID().toString.take(12)
     val m = manifest(spark, table, fromVersion)
     val basePaths = m.select(col("path")).collect().map(_.getString(0)).toSet
+    // file-count-sized × changeset range join: which files does any
+    // change key hit? (broadcast the manifest — it is model-sized)
     val hit = changes.select(col(keyCol).as("ck")).distinct()
       .join(broadcast(m), col("ck") >= col("min_key") && col("ck") <= col("max_key"))
       .select(col("path")).distinct().collect().map(_.getString(0)).toSet
-    val existing =
-      if (hit.isEmpty) readVersion(spark, table, fromVersion).limit(0)
-      else applyDv(spark, table, fromVersion,
-        readConformed(spark, table, fromVersion, hit.toIndexedSeq))
+    val existing = readFiles(spark, table, fromVersion, hit.toSeq)
+    // payload = every non-key, non-op column; upsert takes the change
+    // side, carried-through rows keep their own values
     val payload = changes.columns.filterNot(c => c == keyCol || c == "op").toSeq
     val ch = changes.select((col(keyCol) +: col("op") +:
       payload.map(c => col(c).as(s"_$c"))): _*)
@@ -1090,15 +1050,29 @@ object Ledger {
       .filter(col("op").isNull || col("op") =!= "delete")
       .select((col(keyCol) +: payload.map(c =>
         when(col("op") === "upsert", col(s"_$c")).otherwise(col(c)).as(c))): _*)
+    // rewritten files recompute whatever stat columns the table was
+    // created with (z-dim min/max survive churn; values come from the
+    // actual rewritten rows, so they stay exact even though a key-
+    // ranged rewrite loosens z locality — compaction restores it)
     val out = s"$table/data/c$commitId"
     merged.repartitionByRange(math.max(1, hit.size), col(keyCol))
       .write.mode("overwrite").parquet(out)
     val rewritten = fileStats(spark, out, keyCol, statColsOf(m))
-    // successor deletion vector, same membership discipline as [[merge]]:
-    // release a key only if its row was physically applied (lives in a
-    // hit file the rewrite just read through the vector) or resolved by
-    // the changeset. Staged under the commit-id namespace (vacuum-safe,
-    // [[vacuum]]'s c* rule) and renamed to deletes/v<target> at commit.
+    // successor deletion vector: release a DV key only if it was
+    // PHYSICALLY APPLIED — its row lives in a hit file (the rewrite
+    // read through the vector, so the row is gone from the new files)
+    // or the changeset resolved it (a re-upsert of a DV-deleted key
+    // must become visible again; a merge-delete is now materialized).
+    // Range containment is NOT membership: merges can produce
+    // OVERLAPPING file ranges (a far insert widens a rewritten file's
+    // span across carried files), and release-by-hit-range would drop
+    // a DV key hiding in a carried file that merely falls inside an
+    // overlapping hit file's range — silently resurrecting the deleted
+    // row. Membership is checked against the keys actually present in
+    // the hit files: changed-files-sized I/O (the same files the
+    // rewrite just read), key column only. Staged under the commit-id
+    // namespace (vacuum-safe, [[vacuum]]'s c* rule) and renamed to
+    // deletes/v<target> at commit.
     val stagedDv = deletionVector(spark, table, fromVersion).map { d =>
       val k = d.columns.head
       val hitKeys =
@@ -1325,8 +1299,8 @@ object Ledger {
         writeManifest(spark, table, target, carried.unionByName(p.rewrittenFiles))
         return target
       }
-      // lost the race (or a non-OCC writer owns the version): wait for
-      // the winner's commit point, then validate + rebase
+      // lost the race (or a non-claiming writer owns the version):
+      // wait for the winner's commit point, then validate + rebase
       waitForCommitted(spark, table, target, waitMs)
       val nb = manifest(spark, table, target)
       val nbPaths = nb.select(col("path")).collect().map(_.getString(0)).toSet
@@ -1377,37 +1351,30 @@ object Ledger {
       s"commit ${p.commitId} gave up after $maxAttempts attempts")
   }
 
-  /** One-call optimistic MERGE against the current latest version:
-    * prepare once, then claim/validate/rebase until committed. */
+  /** [[merge]] against the current latest version. */
   def mergeOcc(spark: SparkSession, table: String, changes: DataFrame,
-      keyCol: String): Int = {
-    val base = latestVersion(spark, table)
-    commitPrepared(spark, table,
-      prepareMerge(spark, table, base, changes, keyCol))
+      keyCol: String): Int =
+    merge(spark, table, latestVersion(spark, table), changes, keyCol)
+
+  /** The manifest diff both change feeds project. `pairs` is the
+    * filtered before/after full-outer frame — before-image columns
+    * `_kb`, `_b_<c>`; after-image `_ka`, `_a_<c>` for every `payload`
+    * column `c` — holding one row per key that was inserted, deleted
+    * or changed. `dvDeletes` holds the keys ADDED to the deletion
+    * vector between the versions as (op = delete, key, pre-image
+    * payload) rows, already in the feeds' output shape. */
+  private final case class ManifestDiff(pairs: DataFrame, payload: Seq[String],
+      dvDeletes: Option[DataFrame]) {
+    def withDvDeletes(images: DataFrame): DataFrame =
+      dvDeletes.fold(images)(images.unionByName(_))
   }
 
-  /** CHANGE DATA FEED between two ledger versions, computed from the
-    * MANIFESTS — never by replaying changesets: files referenced by both
-    * manifests are byte-identical (immutable, carried by reference) and
-    * contribute nothing, so only the file-set DIFFERENCE is read — the
-    * before-image from files dropped by `vTo`, the after-image from
-    * files added. A key-level full-outer join then classifies rows:
-    * only-after → insert, only-before → delete, payload differs →
-    * update (post-image); identical rows (unchanged neighbors inside a
-    * copy-on-write rewrite) drop out. Emits the key, `op`, and the
-    * post-image payload (pre-image for deletes).
-    *
-    * Scale shape: I/O and join volume are CHANGED-FILES-sized, not
-    * table-sized — at 100 TB with file-granular copy-on-write, a 0.1 %
-    * merge touches a handful of files and the CDF reads exactly those.
-    * A compaction (pure layout rewrite) diffs to ZERO rows — spec- and
-    * oracle-pinned — so downstream incremental consumers see layout
-    * maintenance as a no-op, the Delta CDF contract. */
-  def readChanges(spark: SparkSession, table: String, vFrom: Int, vTo: Int,
-      keyCol: String): DataFrame = {
-    def paths(v: Int): Set[String] = manifest(spark, table, v)
+  /** The manifest diff of `vFrom` → `vTo` (see [[readChanges]] for the
+    * contract and its cost shape). */
+  private def manifestDiff(spark: SparkSession, table: String, vFrom: Int,
+      vTo: Int, keyCol: String): ManifestDiff = {
+    val pf = manifest(spark, table, vFrom)
       .select(col("path")).collect().map(_.getString(0)).toSet
-    val pf = paths(vFrom)
     // vTo's manifest is needed TWICE (live path set + the dvDeletes
     // range prune below): one read+collect serves both (r13) — the
     // collected rows rebuild a local relation for the prune join
@@ -1459,26 +1426,46 @@ object Ledger {
           .join(addedKeys, col("_dk") >= col("min_key") && col("_dk") <= col("max_key"),
             "left_semi")
           .select(col("path")).collect().map(_.getString(0))
-        if (sharedHit.isEmpty) schemaSrc
-        else readConformed(spark, table, vTo, sharedHit.toIndexedSeq)
-          .join(addedKeys, col(keyCol) === col("_dk"), "left_semi")
+        val preImages =
+          if (sharedHit.isEmpty) schemaSrc
+          else readConformed(spark, table, vTo, sharedHit.toIndexedSeq)
+            .join(addedKeys, col(keyCol) === col("_dk"), "left_semi")
+        preImages.select((lit("delete").as("op") +: col(keyCol) +: payload.map(col)): _*)
       }
     // null-safe payload compare (IS DISTINCT FROM in the oracle): a
     // null-vs-value flip is a change, null-vs-null is not
     val changed = payload.map(c => !(col(s"_b_$c") <=> col(s"_a_$c")))
       .reduce(_ || _)
-    val fileDiff = b.join(a, col("_kb") === col("_ka"), "full_outer")
-      .filter(col("_kb").isNull || col("_ka").isNull || changed)
-      .select((when(col("_kb").isNull, "insert")
-        .when(col("_ka").isNull, "delete").otherwise("update").as("op") +:
-        coalesce(col("_ka"), col("_kb")).as(keyCol) +:
-        payload.map(c => coalesce(col(s"_a_$c"), col(s"_b_$c")).as(c))): _*)
-    dvDeletes match {
-      case None => fileDiff
-      case Some(d) => fileDiff.unionByName(
-        d.select((lit("delete").as("op") +: col(keyCol) +:
-          payload.map(col)): _*))
-    }
+    ManifestDiff(
+      b.join(a, col("_kb") === col("_ka"), "full_outer")
+        .filter(col("_kb").isNull || col("_ka").isNull || changed),
+      payload, dvDeletes)
+  }
+
+  /** CHANGE DATA FEED between two ledger versions, computed from the
+    * MANIFESTS — never by replaying changesets: files referenced by both
+    * manifests are byte-identical (immutable, carried by reference) and
+    * contribute nothing, so only the file-set DIFFERENCE is read — the
+    * before-image from files dropped by `vTo`, the after-image from
+    * files added. A key-level full-outer join then classifies rows:
+    * only-after → insert, only-before → delete, payload differs →
+    * update (post-image); identical rows (unchanged neighbors inside a
+    * copy-on-write rewrite) drop out. Emits the key, `op`, and the
+    * post-image payload (pre-image for deletes).
+    *
+    * Scale shape: I/O and join volume are CHANGED-FILES-sized, not
+    * table-sized — at 100 TB with file-granular copy-on-write, a 0.1 %
+    * merge touches a handful of files and the CDF reads exactly those.
+    * A compaction (pure layout rewrite) diffs to ZERO rows — spec- and
+    * oracle-pinned — so downstream incremental consumers see layout
+    * maintenance as a no-op, the Delta CDF contract. */
+  def readChanges(spark: SparkSession, table: String, vFrom: Int, vTo: Int,
+      keyCol: String): DataFrame = {
+    val d = manifestDiff(spark, table, vFrom, vTo, keyCol)
+    d.withDvDeletes(d.pairs.select((when(col("_kb").isNull, "insert")
+      .when(col("_ka").isNull, "delete").otherwise("update").as("op") +:
+      coalesce(col("_ka"), col("_kb")).as(keyCol) +:
+      d.payload.map(c => coalesce(col(s"_a_$c"), col(s"_b_$c")).as(c))): _*))
   }
 
   /** CHANGE DATA FEED WITH PRE-IMAGES — Delta's four-op `_change_data`
@@ -1489,77 +1476,24 @@ object Ledger {
     * incremental AGGREGATE maintenance: refreshing `SUM(f(x)) GROUP BY
     * g` from the feed needs to RETRACT the old contribution of an
     * updated row before adding the new one — the pre-image. Same
-    * manifest-diff machinery and cost shape as readChanges
-    * (changed-files-sized I/O; compaction pairs diff to zero rows);
-    * kept a separate method so the post-image feed's oracle-pinned
-    * output is untouched. */
+    * manifest diff as readChanges ([[manifestDiff]] — changed-files-
+    * sized I/O; compaction pairs diff to zero rows); only the final
+    * projection differs, and deletes added by a deletion vector are
+    * the same rows in both feeds. */
   def readChangesFull(spark: SparkSession, table: String, vFrom: Int,
       vTo: Int, keyCol: String): DataFrame = {
-    def paths(v: Int): Set[String] = manifest(spark, table, v)
-      .select(col("path")).collect().map(_.getString(0)).toSet
-    val pf = paths(vFrom)
-    // one vTo-manifest read serves the path set and the DV range prune
-    // — same fusion as readChanges (r13)
-    val mTo = manifest(spark, table, vTo)
-    val mToRows = mTo.collect()
-    val pathIdx = mTo.schema.fieldIndex("path")
-    val pt = mToRows.map(_.getString(pathIdx)).toSet
-    // schema source from the collected path set — same one-less-collect
-    // move as readChanges (r13)
-    val schemaSrc =
-      if (pt.nonEmpty) readConformed(spark, table, vTo, pt.toIndexedSeq).limit(0)
-      else readVersion(spark, table, vTo).limit(0)
-    def rd(ps: Set[String]): DataFrame =
-      if (ps.isEmpty) schemaSrc
-      else readConformed(spark, table, vTo, ps.toIndexedSeq)
-    val payload = schemaSrc.columns.filterNot(_ == keyCol).toSeq
-    val b = applyDv(spark, table, vFrom, rd(pf -- pt)).select(col(keyCol).as("_kb") +:
-      payload.map(c => col(c).as(s"_b_$c")): _*)
-    val a = applyDv(spark, table, vTo, rd(pt -- pf)).select(col(keyCol).as("_ka") +:
-      payload.map(c => col(c).as(s"_a_$c")): _*)
-    val changed = payload.map(c => !(col(s"_b_$c") <=> col(s"_a_$c")))
-      .reduce(_ || _)
+    val d = manifestDiff(spark, table, vFrom, vTo, keyCol)
     // one struct per image a row contributes; updates carry BOTH
     val img = (side: String, op: String) => struct(
-      (lit(op).as("op") +: payload.map(c => col(s"_${side}_$c").as(c))): _*)
-    val images = b.join(a, col("_kb") === col("_ka"), "full_outer")
-      .filter(col("_kb").isNull || col("_ka").isNull || changed)
+      (lit(op).as("op") +: d.payload.map(c => col(s"_${side}_$c").as(c))): _*)
+    d.withDvDeletes(d.pairs
       .select(coalesce(col("_ka"), col("_kb")).as(keyCol),
         explode(when(col("_kb").isNull, array(img("a", "insert")))
           .when(col("_ka").isNull, array(img("b", "delete")))
           .otherwise(array(img("b", "update_preimage"),
             img("a", "update_postimage")))).as("_img"))
       .select((col("_img.op").as("op") +: col(keyCol) +:
-        payload.map(c => col(s"_img.$c").as(c))): _*)
-    // DV-added keys: deletes whose pre-image lives in range-pruned
-    // shared files — identical to readChanges' dvDeletes contract
-    val dvDeletes: Option[DataFrame] =
-      deletionVector(spark, table, vTo).map { dt =>
-        val added = deletionVector(spark, table, vFrom)
-          .map(df0 => dt.join(df0, df0.columns.toSeq, "left_anti")).getOrElse(dt)
-        val k = added.columns.head
-        val addedKeys = added.select(col(k).as("_dk"))
-        val shared = pf intersect pt
-        // local relation, not parallelize: the shared-file prune is
-        // manifest-sized metadata — folding it locally keeps the range
-        // semi-join a broadcast over local rows with no parallelize job
-        val sharedHit = spark.createDataFrame(
-            java.util.Arrays.asList(
-              mToRows.filter(r => shared(r.getString(pathIdx))): _*),
-            mTo.schema)
-          .join(addedKeys, col("_dk") >= col("min_key") && col("_dk") <= col("max_key"),
-            "left_semi")
-          .select(col("path")).collect().map(_.getString(0))
-        if (sharedHit.isEmpty) schemaSrc
-        else readConformed(spark, table, vTo, sharedHit.toIndexedSeq)
-          .join(addedKeys, col(keyCol) === col("_dk"), "left_semi")
-      }
-    dvDeletes match {
-      case None => images
-      case Some(d) => images.unionByName(
-        d.select((lit("delete").as("op") +: col(keyCol) +:
-          payload.map(col)): _*))
-    }
+        d.payload.map(c => col(s"_img.$c").as(c))): _*))
   }
 
   // ---- the change feed as a STRUCTURED STREAMING source ----
@@ -2572,11 +2506,13 @@ object Ledger {
     * snapshot nor a merge anyone validated — so publish aborts loudly
     * and the caller re-branches from the new head. The version claim
     * goes through the same [[LogStore]] as every other commit, so a
-    * publish serializes against every CLAIMING writer (OCC commits via
-    * [[commitPrepared]], streaming [[commitBatch]], other publishes) —
-    * the loser aborts. Plain [[merge]] is the documented
-    * single-writer path and never claims; publish re-verifies the head
-    * after winning the claim to shrink (not close) that window.
+    * publish serializes against every CLAIMING writer ([[merge]] and
+    * every other [[commitPrepared]] caller, streaming [[commitBatch]],
+    * other publishes) — the loser aborts. The metadata and maintenance
+    * writers ([[create]], [[evolve]], [[deleteWhere]], [[compact]],
+    * [[compactBinPack]], [[setConstraints]]) still never claim;
+    * publish re-verifies the head after winning the claim to shrink
+    * (not close) that window.
     *
     * While still holding the claim, and BEFORE the parent manifest
     * lands, publish writes a `_published` marker into the branch root:
@@ -2600,7 +2536,8 @@ object Ledger {
     if (head != base) conflict(s"parent advanced to v$head past the audited base v$base")
     if (!logStore.tryClaim(spark, table, target))
       conflict(s"another writer holds the claim for v$target")
-    // re-verify under the claim: a non-claiming writer (plain merge)
+    // re-verify under the claim: a non-claiming writer (create,
+    // evolve, deleteWhere, compact, compactBinPack, setConstraints)
     // could have landed v_target between the check and the claim —
     // this narrows the race to claiming writers' guarantees
     if (latestVersion(spark, table) != base)

@@ -159,8 +159,8 @@ object KnnIncr {
       .select(col("vec_id"), col("v"))
     val n = base.count()
     val (p0, maxD) = VectorOps.knnDialFor(n)
-    val (rows, rRdd) = graft.dedup.Dedup.materializeStatsReset(hashRows(base, maxD))
-    val (hist, hRdd) = graft.dedup.Dedup.materializeStatsReset(
+    val (rows, rRdd) = graft.StandingState.materializeStatsReset(hashRows(base, maxD))
+    val (hist, hRdd) = graft.StandingState.materializeStatsReset(
       rows.groupBy(col("full")).agg(count(lit(1)).as("c")))
     Index(rows, hist, Dial(p0, maxD), n, Seq(rRdd, hRdd))
   }
@@ -182,15 +182,15 @@ object KnnIncr {
     val feed = part.foldLeft(
         Ledger.readChangesFull(spark, table, from, to, "vec_id"))(
         (df, v) => df.filter(col("label") === v))
-    val (hf, hfRdd) = graft.dedup.Dedup.materializeStatsReset(
+    val (hf, hfRdd) = graft.StandingState.materializeStatsReset(
       hashRows(feed.select(col("op"), col("vec_id"), col("v")), prev.dial.maxD)
         .withColumn("_sgn", sgn))
     val removedKeys = hf.filter(col("_sgn") === -1L).select(col("vec_id"))
     val added = hf.filter(col("_sgn") === 1L)
       .select(col("vec_id"), col("v"), col("full"))
-    val (rows, rRdd) = graft.dedup.Dedup.materializeStatsReset(
+    val (rows, rRdd) = graft.StandingState.materializeStatsReset(
       prev.rows.join(removedKeys, Seq("vec_id"), "left_anti").unionByName(added))
-    val (hist, hRdd) = graft.dedup.Dedup.materializeStatsReset(
+    val (hist, hRdd) = graft.StandingState.materializeStatsReset(
       prev.hist.unionByName(hf.groupBy(col("full")).agg(sum(col("_sgn")).as("c")))
         .groupBy(col("full")).agg(sum(col("c")).as("c"))
         .filter(col("c") > 0))
@@ -212,17 +212,17 @@ object KnnIncr {
   private[vector] def refreshFromNet(spark: SparkSession, net: DataFrame,
       prev: Index): Index = {
     val keys = net.select(col("vec_id"))
-    val (added, aRdd) = graft.dedup.Dedup.materializeStatsReset(
+    val (added, aRdd) = graft.StandingState.materializeStatsReset(
       hashRows(net.filter(col("op") === "upsert")
         .select(col("vec_id"), col("v")), prev.dial.maxD))
     // every net key present in the index retracts its STORED code
     // (update pre-image or delete) — feed-keyed join, never a rescan
-    val (retract, retRdd) = graft.dedup.Dedup.materializeStatsReset(
+    val (retract, retRdd) = graft.StandingState.materializeStatsReset(
       prev.rows.join(keys, Seq("vec_id"))
         .groupBy(col("full")).agg((-count(lit(1))).as("c")))
-    val (rows, rRdd) = graft.dedup.Dedup.materializeStatsReset(
+    val (rows, rRdd) = graft.StandingState.materializeStatsReset(
       prev.rows.join(keys, Seq("vec_id"), "left_anti").unionByName(added))
-    val (hist, hRdd) = graft.dedup.Dedup.materializeStatsReset(
+    val (hist, hRdd) = graft.StandingState.materializeStatsReset(
       prev.hist.unionByName(retract)
         .unionByName(added.groupBy(col("full")).agg(count(lit(1)).as("c")))
         .groupBy(col("full")).agg(sum(col("c")).as("c"))

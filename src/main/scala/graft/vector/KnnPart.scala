@@ -132,7 +132,7 @@ object KnnPart {
     val src = coded
     val h = src.groupBy(col("full")).agg(count(lit(1)).as("c"))
     val km = VectorOps.leafDepthsFromHist(h, p0, maxD)
-    val (emb, rdd) = graft.dedup.Dedup.materializeStatsReset(
+    val (emb, rdd) = graft.StandingState.materializeStatsReset(
       src.join(km, Seq("full"))
         .withColumn("bucket", VectorOps.trieKeyExpr(p0, maxD)))
     val e = new PartEntry(emb, p0, maxD)
@@ -193,7 +193,7 @@ object KnnPart {
     entry.synchronized(entry.probes) match {
       case Some(p) => p
       case None =>
-        val (probes, rdd) = graft.dedup.Dedup.materializeStatsReset(
+        val (probes, rdd) = graft.StandingState.materializeStatsReset(
           probeRelation(corpusQueries(spark, dir),
             entry.emb.select(col("bucket").as("leaf_key")).distinct(),
             entry.p0, entry.maxD))
@@ -321,7 +321,7 @@ object KnnPart {
               p0, maxD)) { e =>
           val served = serveFiltered(queriesAll, e.emb,
             probesOf(spark, dir, e), nQ, nF, k)
-          graft.dedup.Dedup.materializeStatsReset(served)._1
+          graft.StandingState.materializeStatsReset(served)._1
         })
     }
   }
@@ -340,7 +340,7 @@ object KnnPart {
       .filter(col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id"),
         VectorOps.cosine(col("qv"), col("v")).as("sim"))
-    val (heaped, _) = graft.dedup.Dedup.materializeStatsReset(
+    val (heaped, _) = graft.StandingState.materializeStatsReset(
       scored.groupBy(col("q_id"))
         .agg(graft.functions.TopKNative.topK(k)(col("sim"), col("vec_id"), lit(0)).as("tk"),
           count(lit(1)).as("nc")))
@@ -408,12 +408,12 @@ object KnnPart {
             sys.error("flat probes resolve no leaves"), p0, maxD),
             qAll, nQv, nPv, Nil)
         } else {
-          val (partDf, h1) = graft.dedup.Dedup.materializeStatsReset(
+          val (partDf, h1) = graft.StandingState.materializeStatsReset(
             idx.rows.join(VectorOps.leafDepthsFromHist(idx.hist, p0, maxD),
                 Seq("full"))
               .withColumn("bucket", VectorOps.trieKeyExpr(p0, maxD))
               .select(col("bucket"), col("vec_id"), col("v")))
-          val (pr, h2) = graft.dedup.Dedup.materializeStatsReset(
+          val (pr, h2) = graft.StandingState.materializeStatsReset(
             probeRelation(qAll,
               partDf.select(col("bucket").as("leaf_key")).distinct(), p0, maxD))
           (partDf, pr, qAll, nQv, nPv, Seq(h1, h2))

@@ -152,7 +152,7 @@ object KnnRouter {
       partKey: Option[Int], k: Int): DataFrame = {
     val fd = fixtureDir(spark)
     graft.StandingState.standing(spark, "knn-router-served", (tag, k))(
-      graft.dedup.Dedup.materializeStatsReset(
+      graft.StandingState.materializeStatsReset(
         knnFilteredRouted(spark, fd, pred, tag, partKey, k))._1)
   }
 

@@ -262,7 +262,7 @@ object VectorOps {
       p0: Int, maxD: Int, dir: String): DataFrame =
     graft.StandingState.standing(spark, "knn-keymap", dir) {
       val h = emb0.groupBy(col("full")).agg(count(lit(1)).as("c"))
-      val (km, _) = graft.dedup.Dedup.materializeStatsReset(
+      val (km, _) = graft.StandingState.materializeStatsReset(
         leafDepthsFromHist(h, p0, maxD))
       km
     }
@@ -309,7 +309,7 @@ object VectorOps {
       val indexed = src.join(knnKeymap(spark, src, p0, maxD, dir), Seq("full"))
         .withColumn("bucket", trieKeyExpr(p0, maxD))
         .withColumn("flip", flipExpr)
-      val (emb, _) = graft.dedup.Dedup.materializeStatsReset(indexed)
+      val (emb, _) = graft.StandingState.materializeStatsReset(indexed)
       (emb, p0, maxD)
     }
   }
@@ -325,7 +325,7 @@ object VectorOps {
     * both fine, unlike a driver-resident InSet of 10^8 longs). */
   private def knnLeafKeysDf(spark: SparkSession, dir: String, emb: DataFrame): DataFrame =
     graft.StandingState.standing(spark, "knn-leaf-keys", dir) {
-      val (df, _) = graft.dedup.Dedup.materializeStatsReset(
+      val (df, _) = graft.StandingState.materializeStatsReset(
         emb.select(col("bucket").as("leaf_key")).distinct())
       df
     }
@@ -465,7 +465,7 @@ object VectorOps {
     // served, AND the build-side-pick scalar below — without it the
     // probe-join + heap aggregate would execute once per consumer.
     // Freed like every tracked artifact at StandingState.release().
-    val (heaped, _) = graft.dedup.Dedup.materializeStatsReset(
+    val (heaped, _) = graft.StandingState.materializeStatsReset(
       scored.groupBy(col("q_id"))
         .agg(graft.functions.TopKNative.topK(k)(col("sim"), col("vec_id"), lit(0)).as("tk"),
           count(lit(1)).as("nc")))
@@ -591,9 +591,9 @@ object VectorOps {
       // — execute the LSH join one time, and free its blocks once the
       // mutual table stands (Dataset.unpersist would be a no-op on
       // checkpoint blocks; the RDD handle is what frees them)
-      val (fwd, fwdRdd) = graft.dedup.Dedup.materializeStatsReset(
+      val (fwd, fwdRdd) = graft.StandingState.materializeStatsReset(
         qKnnJoin(spark, dir).select(col("q_id").as("a"), col("vec_id").as("b")))
-      val (mutual, _) = graft.dedup.Dedup.materializeStatsReset(
+      val (mutual, _) = graft.StandingState.materializeStatsReset(
         fwd.intersect(fwd.select(col("b"), col("a")))
           .filter(col("a") < col("b")))
       fwdRdd.unpersist(blocking = false)
@@ -607,7 +607,7 @@ object VectorOps {
     * query already paid for. */
   private def knnClusterLabels(spark: SparkSession, dir: String): DataFrame =
     graft.StandingState.standing(spark, "knn-cluster-labels", dir) {
-      val (labels, _) = graft.dedup.Dedup.materializeStatsReset(
+      val (labels, _) = graft.StandingState.materializeStatsReset(
         graft.dedup.Dedup.dupClusters(
             knnMutualEdges(spark, dir)
               .select(col("a").as("doc_a"), col("b").as("doc_b")), maxIter = 100)
@@ -641,11 +641,11 @@ object VectorOps {
     * estimate-squaring lesson from dedup/Dedup.scala). */
   def qPagerank(spark: SparkSession, dir: String, iters: Int = 5): DataFrame = {
     val mutual = knnMutualEdges(spark, dir)
-    val (edges, _) = graft.dedup.Dedup.materializeStatsReset(
+    val (edges, _) = graft.StandingState.materializeStatsReset(
       mutual.select(col("a").as("src"), col("b").as("dst"))
         .union(mutual.select(col("b").as("src"), col("a").as("dst"))))
     val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
-    var (pr, prRdd) = graft.dedup.Dedup.materializeStatsReset(
+    var (pr, prRdd) = graft.StandingState.materializeStatsReset(
       deg.crossJoin(broadcast(deg.agg(count(lit(1)).as("n_nodes"))))
         .select(col("src").as("vec_id"), col("outdeg"), col("n_nodes"),
           expr("1000000000000 div n_nodes").as("pr")))
@@ -657,7 +657,7 @@ object VectorOps {
         .select(col("vec_id"), col("outdeg"), col("n_nodes"),
           (expr("(15 * (1000000000000 div n_nodes)) div 100") +
             expr("(85 * coalesce(in_mass, cast(0 as bigint))) div 100")).as("pr"))
-      val (m, r) = graft.dedup.Dedup.materializeStatsReset(next)
+      val (m, r) = graft.StandingState.materializeStatsReset(next)
       prRdd.unpersist(blocking = false)
       pr = m
       prRdd = r

@@ -161,6 +161,33 @@ class LedgerSpec extends AnyFunSuite {
       .count().collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(maintained == recomputed,
       "feed-maintained per-source counts must equal head recomputation")
+    // ONE manifest diff behind both feeds: over a lineage with a
+    // deletion vector, a DV re-insert and a compaction, the full feed
+    // minus its pre-images (post-images named `update`) IS the
+    // post-image feed, row for row, on every adjacent version pair
+    val t = Ledger.tableRoot("ledger_cdf_shared_diff")
+    Ledger.create(spark, t, (0L until 400L)
+      .map(i => (i, s"src${i % 4}", s"document body $i"))
+      .toDF("doc_id", "source", "text"), "doc_id", nFiles = 8)
+    Ledger.deleteWhere(spark, t, 0, "doc_id", col("doc_id") % 5 === 2) // v1
+    Ledger.merge(spark, t, 1, Seq((2L, "upsert", "srcX", "back 2"),
+        (5L, "upsert", "srcX", "edited 5"), (8L, "delete", "", ""),
+        (900L, "upsert", "srcN", "brand new 900"))
+      .toDF("doc_id", "op", "source", "text"), "doc_id") // v2
+    Ledger.compact(spark, t, 2, "doc_id", nFiles = 2) // v3
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().toSeq.sortBy(_.toString)
+    val sizes = (1 to 3).map { v =>
+      val post = rows(Ledger.readChanges(spark, t, v - 1, v, "doc_id"))
+      val fromFull = rows(Ledger.readChangesFull(spark, t, v - 1, v, "doc_id")
+        .filter(col("op") =!= "update_preimage")
+        .withColumn("op", when(col("op") === "update_postimage", "update")
+          .otherwise(col("op"))))
+      assert(fromFull == post, s"v${v - 1} -> v$v: full feed diverges from readChanges")
+      post.size
+    }
+    // the lineage exercises each arm: 80 DV deletes; re-insert of 2,
+    // update of 5, delete of 8, insert of 900; an empty compaction
+    assert(sizes == Seq(80, 4, 0), s"feed sizes per pair: $sizes")
   }
 
   test("vacuum keeps carried-by-reference files alive and expires old versions") {
@@ -418,6 +445,36 @@ class LedgerSpec extends AnyFunSuite {
       assert(dfv.filter(col("source").startsWith("w")).count() == v,
         s"v$v must carry exactly $v committed edits")
     }
+  }
+
+  test("plain merges from one base serialize: disjoint keys rebase, overlapping keys abort") {
+    import spark.implicits._
+    val t = Ledger.tableRoot("ledger_merge_same_base")
+    val docs = (0L until 400L).map(i => (i, s"src${i % 4}", s"document body $i"))
+      .toDF("doc_id", "source", "text")
+    Ledger.create(spark, t, docs, "doc_id", nFiles = 8)
+    def upsert(key: Long, text: String) =
+      Seq((key, "upsert", "srcM", text)).toDF("doc_id", "op", "source", "text")
+    // two writers that both read v0, touching DIFFERENT range files:
+    // the second claims past the first instead of replacing v1
+    Ledger.merge(spark, t, 0, upsert(2L, "first wrote 2"), "doc_id")
+    Ledger.merge(spark, t, 0, upsert(355L, "second wrote 355"), "doc_id")
+    assert(Ledger.latestVersion(spark, t) == 2, "the second merge must rebase to v2")
+    val head = Ledger.readVersion(spark, t, 2).collect()
+      .map(r => r.getLong(0) -> r.getString(2)).toMap
+    assert(head(2L) == "first wrote 2" && head(355L) == "second wrote 355",
+      "both merges from one base must be visible at the head")
+    assert(head.size == 400)
+    // two writers that both read v2 and upsert the SAME key: the second
+    // read a file the first rewrote, so it aborts
+    Ledger.merge(spark, t, 2, upsert(100L, "third wrote 100"), "doc_id")
+    intercept[java.util.ConcurrentModificationException] {
+      Ledger.merge(spark, t, 2, upsert(100L, "fourth wrote 100"), "doc_id")
+    }
+    assert(Ledger.latestVersion(spark, t) == 3)
+    assert(Ledger.readVersion(spark, t, 3).filter(col("doc_id") === 100L)
+      .collect().head.getString(2) == "third wrote 100",
+      "the aborted merge must not overwrite the committed one")
   }
 
   test("OCC stress: 8 contended writers serialize via the FS claim primitive") {
