@@ -21,11 +21,20 @@ import graft.Tables
   *   <table>/data/c<commitId>/part-*.parquet -- files added by a merge
   *   <table>/_manifest/v<N>/                 -- parquet rows: one per
   *     (path, min_key, max_key, rows)           live data file @ version N
+  *   <table>/_schema/v<N>.ddl                -- version N's logical schema
+  *   <table>/deletes/v<N>/                   -- its deletion vector, if any
+  *   <table>/_constraints/v<N>               -- CHECK set declared at N
+  *   <table>/_claims/v<N>                    -- OCC claim on version N
+  *   <table>/_txns/v<N>                      -- streaming writer's txn marker
   * }}}
   *
   * Create and compactions write under the version they commit; a
   * merge stages its rewrite under a commit id before it knows which
   * version it will claim ([[prepareMerge]], [[commitPrepared]]).
+  * Every writer lands its version through [[writeVersion]]: the
+  * sidecars first, then the manifest, whose `_SUCCESS` marker is the
+  * commit point — a reader that sees version N sees its schema and
+  * deletion vector too.
   *
   * Every write is a new manifest that REFERENCES files — never mutates
   * them — so any historical version stays readable forever (until
@@ -118,6 +127,40 @@ object Ledger {
       .write.mode("overwrite").parquet(manifestPath(table, version))
   }
 
+  /** Land version N: the one commit tail every writer calls. The
+    * sidecars go first — the schema, the deletion vector `dv` (None
+    * when no deletes are pending, or when the caller already renamed a
+    * staged vector into place) and, where given, the CHECK set — then
+    * the manifest, whose `_SUCCESS` marker is the commit point. A
+    * reader that sees version N therefore sees its sidecars too, and a
+    * writer that dies before the marker leaves a version no reader
+    * counts ([[latestVersion]]). */
+  private def writeVersion(spark: SparkSession, table: String, version: Int,
+      files: DataFrame, schema: StructType, dv: Option[DataFrame] = None,
+      checks: Option[Seq[Check]] = None): Unit = {
+    writeSchema(spark, table, version, schema)
+    dv.foreach(_.write.mode("overwrite").parquet(deletePath(table, version)))
+    checks.foreach(writeConstraints(spark, table, version, _))
+    writeManifest(spark, table, version, files)
+  }
+
+  /** The entries of directory `p`; none when it does not exist. */
+  private def listDir(spark: SparkSession, table: String,
+      p: String): Array[org.apache.hadoop.fs.FileStatus] =
+    try fs(spark, table).listStatus(new Path(p))
+    catch { case _: java.io.FileNotFoundException =>
+      Array.empty[org.apache.hadoop.fs.FileStatus] }
+
+  /** A directory's file identity — every entry's name:length:mtime,
+    * sorted by name — the cache token of [[manifest]] and
+    * [[deletionVector]]. It assumes Spark-only writers: a Spark rewrite
+    * always gets a new part-file name, so a rewritten directory is a
+    * new token. */
+  private def dirToken(st: Array[org.apache.hadoop.fs.FileStatus]): String =
+    st.sortBy(_.getPath.getName)
+      .map(s => s"${s.getPath.getName}:${s.getLen}:${s.getModificationTime}")
+      .mkString(",")
+
   /** The manifest of version N (file-count-sized), served from a
     * collected-manifest cache (r14, guide §5: the driver should do
     * almost no data work — and re-reading a file-count-sized manifest
@@ -125,10 +168,9 @@ object Ledger {
     * expense). Keyed (session, table, version, token): the cached
     * relation is bound to the session that built it, and a new session
     * must not be served one whose context has stopped. The token is the
-    * manifest directory's file identity, read per call (every entry's
-    * name + length + mtime — a Spark rewrite always changes the part
-    * file's UUID name), so an in-session table rebuild or vacuum is a
-    * new key and can never serve stale rows — the exact staleness
+    * manifest directory's file identity, read per call ([[dirToken]]),
+    * so an in-session table rebuild or vacuum is a new key and can
+    * never serve stale rows — the exact staleness
     * hazard that made r13 reject a naive (table, version) memo. The
     * cached value is the collected rows rebuilt as a LOCAL RELATION:
     * every downstream `.select("path").collect()` constant-folds to a job-free
@@ -145,16 +187,10 @@ object Ledger {
     * would surface a half-published version. */
   def manifest(spark: SparkSession, table: String, version: Int): DataFrame = {
     val p = manifestPath(table, version)
-    val st = try fs(spark, table).listStatus(new Path(p))
-      catch { case _: java.io.FileNotFoundException =>
-        Array.empty[org.apache.hadoop.fs.FileStatus] }
+    val st = listDir(spark, table, p)
     require(st.exists(_.getPath.getName == "_SUCCESS"),
       s"version $version is not committed (no _SUCCESS marker in $p)")
-    // name:length:mtime assumes Spark-only writers (a rewrite always gets a new part-file name)
-    val token = st.sortBy(_.getPath.getName)
-      .map(s => s"${s.getPath.getName}:${s.getLen}:${s.getModificationTime}")
-      .mkString(",")
-    graft.StandingState.standing(spark, "ledger-manifest", (table, version, token)) {
+    graft.StandingState.standing(spark, "ledger-manifest", (table, version, dirToken(st))) {
       val raw = spark.read.parquet(p)
       val rows = raw.collect()
       spark.createDataFrame(java.util.Arrays.asList(rows: _*), raw.schema)
@@ -164,44 +200,35 @@ object Ledger {
   private def schemaPath(table: String, version: Int) =
     s"$table/_schema/v$version.ddl"
 
+  /** Record version N's schema with every field nullable. This is the
+    * one place nullability is normalised: parquet reads every column
+    * back nullable and files written before an ADD COLUMN backfill
+    * null, so a recorded NOT NULL could only make a DDL comparison see
+    * a schema change that never happened. */
   private def writeSchema(spark: SparkSession, table: String, version: Int,
-      schema: StructType): Unit = {
-    val out = fs(spark, table).create(new Path(schemaPath(table, version)), true)
-    try out.write(schema.toDDL.getBytes(UTF_8)) finally out.close()
-  }
+      schema: StructType): Unit =
+    writeSmallFile(fs(spark, table), new Path(schemaPath(table, version)),
+      StructType(schema.fields.map(_.copy(nullable = true))).toDDL)
 
-  /** The LOGICAL schema of version N, if this table has ever evolved
-    * (versions written before the first [[evolve]] have no sidecar —
-    * their files all share one physical schema and reads use it as-is). */
-  def schemaOf(spark: SparkSession, table: String, version: Int): Option[StructType] = {
-    val p = new Path(schemaPath(table, version))
-    val f = fs(spark, table)
-    if (!f.exists(p)) None
-    else {
-      val in = f.open(p)
-      val ddl = try {
-        val len = f.getFileStatus(p).getLen.toInt
-        val buf = new Array[Byte](len)
-        in.readFully(0, buf)
-        new String(buf, UTF_8)
-      } finally in.close()
-      // recorded fields are all nullable: pre-evolution files backfill
-      // the added columns with null on read
-      Some(StructType(StructType.fromDDL(ddl).fields.map(_.copy(nullable = true))))
-    }
-  }
+  /** The LOGICAL schema of version N. Every commit records one
+    * ([[writeVersion]]); files written before an [[evolve]] read
+    * through it with null for the added columns. */
+  def schemaOf(spark: SparkSession, table: String, version: Int): StructType =
+    StructType.fromDDL(readSmallFile(fs(spark, table), new Path(schemaPath(table, version))))
 
   /** Read a file set conformed to version N's logical schema: the
-    * schema is passed to the parquet reader (no footer merging — the
-    * manifest/sidecar already knows it), and files written before an
-    * ADD COLUMN yield null for the added columns, the Delta/Iceberg
-    * read contract. */
+    * schema is passed to the parquet reader (no footer inference — the
+    * sidecar already knows it), and files written before an ADD COLUMN
+    * yield null for the added columns, the Delta/Iceberg read
+    * contract. */
   private def readConformed(spark: SparkSession, table: String, version: Int,
       paths: Seq[String]): DataFrame =
-    schemaOf(spark, table, version) match {
-      case Some(s) => spark.read.schema(s).parquet(paths: _*)
-      case None    => spark.read.parquet(paths: _*)
-    }
+    spark.read.schema(schemaOf(spark, table, version)).parquet(paths: _*)
+
+  /** A zero-row frame of `schema`: a local relation, so building it
+    * runs no Spark job. */
+  private def emptyFrame(spark: SparkSession, schema: StructType): DataFrame =
+    spark.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](), schema)
 
   private def deletePath(table: String, version: Int) =
     s"$table/deletes/v$version"
@@ -218,17 +245,10 @@ object Ledger {
     * resolution that every applyDv/readChanges pair re-paid. */
   def deletionVector(spark: SparkSession, table: String, version: Int): Option[DataFrame] = {
     val p = deletePath(table, version)
-    val st = try fs(spark, table).listStatus(new Path(p))
-      catch { case _: java.io.FileNotFoundException =>
-        Array.empty[org.apache.hadoop.fs.FileStatus] }
+    val st = listDir(spark, table, p)
     if (st.isEmpty) None
-    else {
-      val token = st.sortBy(_.getPath.getName)
-        .map(s => s"${s.getPath.getName}:${s.getLen}:${s.getModificationTime}")
-        .mkString(",")
-      Some(graft.StandingState.standing(spark, "ledger-dv-plan", (table, version, token))(
-        spark.read.parquet(p)))
-    }
+    else Some(graft.StandingState.standing(spark, "ledger-dv-plan", (table, version, dirToken(st)))(
+      spark.read.parquet(p)))
   }
 
   private def applyDv(spark: SparkSession, table: String, version: Int,
@@ -240,20 +260,16 @@ object Ledger {
 
   /** TIME TRAVEL: the table's full content AS OF version N (data files
     * minus the version's deletion vector — merge-on-read). */
-  def readVersion(spark: SparkSession, table: String, version: Int): DataFrame = {
-    val paths = manifest(spark, table, version)
-      .select(col("path")).collect().map(_.getString(0))
-    if (paths.isEmpty) spark.emptyDataFrame
-    else applyDv(spark, table, version,
-      readConformed(spark, table, version, paths.toIndexedSeq))
-  }
+  def readVersion(spark: SparkSession, table: String, version: Int): DataFrame =
+    readFiles(spark, table, version, manifest(spark, table, version)
+      .select(col("path")).collect().map(_.getString(0)).toIndexedSeq)
 
   /** The live rows of version N held in `paths` (a subset of its
     * manifest): conformed to the version's schema, through its deletion
     * vector. No paths = a zero-row frame with the version's schema. */
   private def readFiles(spark: SparkSession, table: String, version: Int,
       paths: Seq[String]): DataFrame =
-    if (paths.isEmpty) readVersion(spark, table, version).limit(0)
+    if (paths.isEmpty) emptyFrame(spark, schemaOf(spark, table, version))
     else applyDv(spark, table, version,
       readConformed(spark, table, version, paths.toIndexedSeq))
 
@@ -318,9 +334,8 @@ object Ledger {
       case None    => df.repartitionByRange(nFiles, col(keyCol))
     }
     val files = writeDataFiles(spark, laid, table, 0, keyCol, statCols)
-    // sidecar lands before the manifest (the commit point)
-    if (checks.nonEmpty) writeConstraints(spark, table, 0, checks)
-    writeManifest(spark, table, 0, files)
+    writeVersion(spark, table, 0, files, df.schema,
+      checks = Some(checks).filter(_.nonEmpty))
   }
 
   /** SCHEMA EVOLUTION: ADD COLUMN as a METADATA-ONLY commit, the
@@ -336,21 +351,11 @@ object Ledger {
       addCols: Seq[StructField]): Unit = {
     val version = fromVersion + 1
     val base = schemaOf(spark, table, fromVersion)
-      .getOrElse(readVersion(spark, table, fromVersion).schema)
     val dup = addCols.map(_.name).filter(base.fieldNames.contains)
     require(dup.isEmpty, s"columns already exist: ${dup.mkString(",")}")
-    // sidecars land BEFORE the manifest — the manifest write is the
-    // commit point, so a reader that sees v<N> sees its schema/DV too
-    writeSchema(spark, table, version,
-      StructType(base.fields ++ addCols.map(_.copy(nullable = true))))
-    carryDv(spark, table, fromVersion, version)
-    writeManifest(spark, table, version, manifest(spark, table, fromVersion))
+    writeVersion(spark, table, version, manifest(spark, table, fromVersion),
+      StructType(base.fields ++ addCols), deletionVector(spark, table, fromVersion))
   }
-
-  private def carryDv(spark: SparkSession, table: String,
-      fromVersion: Int, version: Int): Unit =
-    deletionVector(spark, table, fromVersion)
-      .foreach(_.write.mode("overwrite").parquet(deletePath(table, version)))
 
   /** DELETE WHERE as a MERGE-ON-READ commit (Iceberg v2 / Delta
     * deletion vectors): the matching KEYS are appended to the deletion
@@ -368,19 +373,10 @@ object Ledger {
     val n = matching.count()
     val dv = deletionVector(spark, table, fromVersion)
       .map(_.unionByName(matching).distinct()).getOrElse(matching)
-    dv.write.mode("overwrite").parquet(deletePath(table, version))
-    carrySchema(spark, table, fromVersion, version)
-    writeManifest(spark, table, version, manifest(spark, table, fromVersion))
+    writeVersion(spark, table, version, manifest(spark, table, fromVersion),
+      schemaOf(spark, table, fromVersion), Some(dv))
     n
   }
-
-  /** Carry version N's schema sidecar (if any) forward to version N+1
-    * — deletes, compactions and constraint commits never change the
-    * logical schema (a merge carries it through [[commitPrepared]]). */
-  private def carrySchema(spark: SparkSession, table: String,
-      fromVersion: Int, version: Int): Unit =
-    schemaOf(spark, table, fromVersion)
-      .foreach(writeSchema(spark, table, version, _))
 
   // ------------------------------------------------------------------
   // CHECK constraints (the Delta `ADD CONSTRAINT ... CHECK` contract):
@@ -438,9 +434,7 @@ object Ledger {
   private def validateChecks(checks: Seq[Check], schema: StructType,
       what: String): Unit = {
     if (checks.isEmpty) return
-    val spark = SparkSession.active
-    val empty = spark.createDataFrame(
-      new java.util.ArrayList[org.apache.spark.sql.Row](), schema)
+    val empty = emptyFrame(SparkSession.active, schema)
     checks.foreach { c =>
       val analyzed =
         try empty.select(expr(c.expr).as("_v"))
@@ -502,10 +496,9 @@ object Ledger {
       s"ADD CONSTRAINT on $table@v$fromVersion")
     enforceChecks(checks, current,
       s"ADD CONSTRAINT on $table@v$fromVersion")
-    writeConstraints(spark, table, version, checks)
-    carrySchema(spark, table, fromVersion, version)
-    carryDv(spark, table, fromVersion, version)
-    writeManifest(spark, table, version, manifest(spark, table, fromVersion))
+    writeVersion(spark, table, version, manifest(spark, table, fromVersion),
+      schemaOf(spark, table, fromVersion), deletionVector(spark, table, fromVersion),
+      Some(checks))
   }
 
   /** The MERGE precondition, checked loudly: one cheap changeset-sized
@@ -564,8 +557,7 @@ object Ledger {
       statColsOf(manifest(spark, table, fromVersion)))
     // no DV carry: the rewrite read through the vector, so the deletes
     // are physically applied and the compacted version starts clean
-    carrySchema(spark, table, fromVersion, version)
-    writeManifest(spark, table, version, files)
+    writeVersion(spark, table, version, files, schemaOf(spark, table, fromVersion))
   }
 
   /** Incremental BIN-PACK compaction (Iceberg `rewriteDataFiles`
@@ -664,16 +656,15 @@ object Ledger {
         case None    => content.repartitionByRange(nOut, col(keyCol))
       }
       val packed = writeDataFiles(spark, laid, table, version, keyCol, statColsOf(m))
-      dv.foreach { d =>
+      val successorDv = dv.map { d =>
         val k = d.columns.head
         val packedKeys = tagged.filter(col("_file").isInCollection(selPaths.toSeq))
           .select(col(keyCol).as(k))
         d.join(packedKeys, Seq(k), "left_anti")
-          .write.mode("overwrite").parquet(deletePath(table, version))
       }
-      carrySchema(spark, table, fromVersion, version)
       val carried = m.filter(!col("path").isInCollection(selPaths.toSeq :+ ""))
-      writeManifest(spark, table, version, carried.unionByName(packed))
+      writeVersion(spark, table, version, carried.unionByName(packed),
+        schemaOf(spark, table, fromVersion), successorDv)
       selected.length
     } finally rawRdd.unpersist(blocking = false)
   }
@@ -860,8 +851,7 @@ object Ledger {
     var done = false
     while (!done) {
       val latest = latestVersion(spark, table)
-      val have = schemaOf(spark, table, latest)
-        .getOrElse(readVersion(spark, table, latest).schema).fieldNames.toSet
+      val have = schemaOf(spark, table, latest).fieldNames.toSet
       val missing = want.filterNot(f => have(f.name))
       if (missing.isEmpty) done = true
       else if (logStore.tryClaim(spark, table, latest + 1))
@@ -1009,7 +999,7 @@ object Ledger {
   final case class PreparedMerge(
       baseVersion: Int, basePaths: Set[String], hitFiles: Set[String],
       rewrittenFiles: DataFrame, changeKeys: DataFrame,
-      stagedDv: Option[String], baseSchemaDdl: Option[String],
+      stagedDv: Option[String], baseSchemaDdl: String,
       commitId: String)
 
   /** Phase 1 of a MERGE ([[merge]] is this plus [[commitPrepared]]):
@@ -1023,7 +1013,7 @@ object Ledger {
     * (base DV minus physically-applied minus changeset-resolved keys)
     * is STAGED under the commit-id dir, renamed into place only at
     * commit — so an interleaved commit can still validate/rebase
-    * against it ([[commitPrepared]]'s DV rules). */
+    * against it (the deletion-vector rules of [[requireDisjoint]]). */
   def prepareMerge(spark: SparkSession, table: String, fromVersion: Int,
       changes: DataFrame, keyCol: String): PreparedMerge = {
     requireUniqueKeys(changes, keyCol)
@@ -1087,7 +1077,7 @@ object Ledger {
     }
     PreparedMerge(fromVersion, basePaths, hit, rewritten,
       changes.select(col(keyCol).as("ck")).distinct(), stagedDv,
-      schemaOf(spark, table, fromVersion).map(_.toDDL), commitId)
+      schemaOf(spark, table, fromVersion).toDDL, commitId)
   }
 
   /** A JVM-local CONDITIONAL-PUT claim store — the semantic stand-in
@@ -1222,34 +1212,16 @@ object Ledger {
     *     deployment swaps in a conditional-put/DynamoDB impl
     *     ([[CasLogStore]] is the in-JVM semantic twin), the commit
     *     protocol unchanged.
-    *  2. Claim won → sidecars land, then the manifest (the commit
-    *     point). The interleaving window is conflict-free because the
-    *     claimed version's base IS the prepare-time base.
+    *  2. Claim won → the staged deletion vector is renamed into
+    *     place and the version lands ([[writeVersion]]). The
+    *     interleaving window is conflict-free because the claimed
+    *     version's base IS the prepare-time base.
     *  3. Claim lost → wait for the winner's manifest `_SUCCESS`, then
-    *     VALIDATE against the new base and REBASE:
-    *     - a hit file missing from the new base → the winner rewrote a
-    *       file this merge read — ABORT (ConcurrentModificationException);
-    *     - a file the winner ADDED whose key range intersects any of
-    *       this merge's change keys → overlapping writes — ABORT;
-    *     - schema sidecar changed under us → ABORT;
-    *     - deletion-vector rules (key-level state composes only when
-    *       provably conflict-free):
-    *       · the winner ADDED vector keys (an interleaved DELETE WHERE)
-    *         → ABORT — this merge's staged vector predates them and
-    *         publishing it would resurrect the winner's deletes;
-    *       · the winner RELEASED vector keys whose rows are LIVE in its
-    *         added files (a changeset re-upsert of a hidden key) →
-    *         ABORT — this merge's staged vector would re-hide the
-    *         winner's update;
-    *       · the winner released keys only by PHYSICAL APPLICATION
-    *         (rows dropped in its rewrite) → SAFE: this merge's staged
-    *         vector may still name those keys, but their rows no longer
-    *         exist anywhere, so the extra entries are inert — rebase
-    *         proceeds. (Checked by reading ONLY the winner's added
-    *         files, changed-files-sized I/O.)
-    *     - otherwise the commits are DISJOINT: carry the new base's
-    *       files (minus the hit set) and retry one version up — the
-    *       rewrite is NOT recomputed, rebase is metadata-only.
+    *     VALIDATE the winner against this merge ([[requireDisjoint]]:
+    *     any conflict ABORTS with ConcurrentModificationException) and
+    *     REBASE: carry the new base's files (minus the hit set) and
+    *     retry one version up — the rewrite is NOT recomputed, rebase
+    *     is metadata-only.
     *
     * `txn = Some((appId, batchId))` makes the commit IDEMPOTENT per
     * writer: the pair is recorded in a per-version sidecar at the
@@ -1292,63 +1264,98 @@ object Ledger {
           f.mkdirs(dst.getParent)
           f.rename(new Path(s), dst)
         }
-        p.baseSchemaDdl.foreach(ddl =>
-          writeSchema(spark, table, target, StructType.fromDDL(ddl)))
         val carried = manifest(spark, table, base)
           .filter(!col("path").isInCollection(p.hitFiles.toSeq :+ ""))
-        writeManifest(spark, table, target, carried.unionByName(p.rewrittenFiles))
+        writeVersion(spark, table, target, carried.unionByName(p.rewrittenFiles),
+          StructType.fromDDL(p.baseSchemaDdl))
         return target
       }
       // lost the race (or a non-claiming writer owns the version):
       // wait for the winner's commit point, then validate + rebase
       waitForCommitted(spark, table, target, waitMs)
-      val nb = manifest(spark, table, target)
-      val nbPaths = nb.select(col("path")).collect().map(_.getString(0)).toSet
-      def conflict(why: String) = throw new java.util.ConcurrentModificationException(
-        s"commit ${p.commitId} vs interleaved v$target: $why")
-      val lostHit = p.hitFiles -- nbPaths
-      if (lostHit.nonEmpty)
-        conflict(s"concurrent commit rewrote files this merge read: ${lostHit.take(2).mkString(",")}")
-      if (schemaOf(spark, table, target).map(_.toDDL) != p.baseSchemaDdl)
-        conflict("concurrent schema evolution")
-      // a concurrent setConstraints is metadata-only (same files, same
-      // schema, same DV) and would rebase silently — but this merge's
-      // rows were checked against the OLD set, so force a re-prepare
-      if (constraintsOf(spark, table, target) !=
-          constraintsOf(spark, table, p.baseVersion))
-        conflict("concurrent CHECK-constraint change; re-prepare under the new set")
-      // deletion-vector validation (rules in the doc comment above)
-      val dvBase = deletionVector(spark, table, base)
-      val dvNew = deletionVector(spark, table, target)
-      val addedPaths = (nbPaths -- p.basePaths).toSeq
-      (dvBase, dvNew) match {
-        case (None, Some(dn)) if dn.limit(1).count() > 0 =>
-          conflict("concurrent commit added deletion-vector keys")
-        case (Some(db), dnOpt) =>
-          val k = db.columns.head
-          val dn = dnOpt.getOrElse(db.limit(0))
-          if (dn.join(db, Seq(k), "left_anti").limit(1).count() > 0)
-            conflict("concurrent commit added deletion-vector keys")
-          val released = db.join(dn, Seq(k), "left_anti")
-          if (released.limit(1).count() > 0 && addedPaths.nonEmpty) {
-            // the vector's single column is named after the table's key
-            val keyAtK = readConformed(spark, table, target, addedPaths.toIndexedSeq)
-              .select(col(k))
-            if (released.join(keyAtK, Seq(k), "left_semi").limit(1).count() > 0)
-              conflict("concurrent commit re-inserted a deletion-vector key " +
-                "this merge's staged vector would re-hide")
-          }
-        case _ => ()
-      }
-      val added = nb.filter(col("path").isInCollection(addedPaths :+ ""))
-      val touched = added.join(p.changeKeys,
-        col("ck") >= col("min_key") && col("ck") <= col("max_key"), "left_semi")
-      if (touched.limit(1).count() > 0)
-        conflict("concurrent commit added files overlapping this merge's change keys")
+      requireDisjoint(spark, table, p.baseVersion, p.baseSchemaDdl, p.basePaths,
+        p.hitFiles, dvFrom = base, head = target, p.changeKeys,
+        who = "concurrent commit", me = "this merge", myKeys = "this merge's change keys",
+        conflict = why => throw new java.util.ConcurrentModificationException(
+          s"commit ${p.commitId} vs interleaved v$target: $why"))
       base = target
     }
     throw new java.util.ConcurrentModificationException(
       s"commit ${p.commitId} gave up after $maxAttempts attempts")
+  }
+
+  /** The one disjointness check of an interleaved commit, shared by
+    * [[commitPrepared]] (a merge that lost its claim, checked against
+    * the winner) and [[rebaseBranch]] (a branch, checked against the
+    * parent's commits since its base). The checked writer read version
+    * `base` (manifest paths `basePaths`, schema `baseSchemaDdl`),
+    * rewrote or removed `hitFiles` of it, and changed the keys
+    * `changeKeys` (one column, `ck`); the interleaved writer `who`
+    * committed `head`. Each rule below ends in `conflict`, in order:
+    *
+    *  - a hit file missing from `head`: `who` rewrote a file this
+    *    writer read;
+    *  - `head`'s schema differs from `baseSchemaDdl`;
+    *  - `head`'s CHECK set differs from `base`'s: that metadata-only
+    *    commit passes every other rule, but this writer's rows were
+    *    checked against the old set;
+    *  - deletion-vector rules over the step `dvFrom` → `head` (key-level
+    *    state composes only when provably conflict-free):
+    *    · `who` ADDED vector keys (an interleaved DELETE WHERE): this
+    *      writer's vector predates them, and landing it would
+    *      resurrect those deletes;
+    *    · `who` RELEASED vector keys whose rows are LIVE in its added
+    *      files (a re-upsert of a hidden key): this writer's vector
+    *      would re-hide that update;
+    *    · keys released only by PHYSICAL APPLICATION (rows dropped in
+    *      a rewrite) are SAFE: this writer's vector may still name
+    *      them, but their rows exist nowhere, so the entries are inert.
+    *      Told apart by reading ONLY the added files (changed-files-
+    *      sized I/O);
+    *  - a file added since `base` whose key range intersects a changed
+    *    key: overlapping writes.
+    *
+    * `me` and `myKeys` name the checked writer and its changed keys in
+    * the messages. `changeKeys` is by-name: it is built only once every
+    * earlier rule has passed. */
+  private def requireDisjoint(spark: SparkSession, table: String, base: Int,
+      baseSchemaDdl: String, basePaths: Set[String], hitFiles: Set[String],
+      dvFrom: Int, head: Int, changeKeys: => DataFrame,
+      who: String, me: String, myKeys: String, conflict: String => Nothing): Unit = {
+    val mHead = manifest(spark, table, head)
+    val headPaths = mHead.select(col("path")).collect().map(_.getString(0)).toSet
+    val lostHit = hitFiles -- headPaths
+    if (lostHit.nonEmpty)
+      conflict(s"$who rewrote files $me read: ${lostHit.take(2).mkString(",")}")
+    if (schemaOf(spark, table, head).toDDL != baseSchemaDdl)
+      conflict(s"$who evolved the schema")
+    if (constraintsOf(spark, table, head) != constraintsOf(spark, table, base))
+      conflict(s"$who made a CHECK-constraint change; $me's rows were checked " +
+        "against the old set")
+    val added = (headPaths -- basePaths).toSeq
+    (deletionVector(spark, table, dvFrom), deletionVector(spark, table, head)) match {
+      case (None, Some(dh)) if dh.limit(1).count() > 0 =>
+        conflict(s"$who added deletion-vector keys")
+      case (Some(db), dhOpt) =>
+        val k = db.columns.head
+        val dh = dhOpt.getOrElse(db.limit(0))
+        if (dh.join(db, Seq(k), "left_anti").limit(1).count() > 0)
+          conflict(s"$who added deletion-vector keys")
+        val released = db.join(dh, Seq(k), "left_anti")
+        if (released.limit(1).count() > 0 && added.nonEmpty) {
+          // the vector's single column is named after the table's key
+          val keyAtHead = readConformed(spark, table, head, added.toIndexedSeq)
+            .select(col(k))
+          if (released.join(keyAtHead, Seq(k), "left_semi").limit(1).count() > 0)
+            conflict(s"$who re-inserted a deletion-vector key $me's vector would re-hide")
+        }
+      case _ => ()
+    }
+    val touched = mHead.filter(col("path").isInCollection(added :+ ""))
+      .join(changeKeys, col("ck") >= col("min_key") && col("ck") <= col("max_key"),
+        "left_semi")
+    if (touched.limit(1).count() > 0)
+      conflict(s"$who added files overlapping $myKeys")
   }
 
   /** [[merge]] against the current latest version. */
@@ -1383,14 +1390,9 @@ object Ledger {
     val mToRows = mTo.collect()
     val pathIdx = mTo.schema.fieldIndex("path")
     val pt = mToRows.map(_.getString(pathIdx)).toSet
-    // schema source from the path set ALREADY collected (r13):
-    // readVersion(vTo) re-collected vTo's manifest and planned its DV
-    // anti-join just to take limit(0) — one driver job per CDF pair for
-    // a zero-row frame. A conformed read over the known paths carries
-    // the same logical schema with no extra action.
-    val schemaSrc =
-      if (pt.nonEmpty) readConformed(spark, table, vTo, pt.toIndexedSeq).limit(0)
-      else readVersion(spark, table, vTo).limit(0)
+    // a zero-row frame of vTo's recorded schema: the empty side of
+    // the diff and the payload column list, with no Spark job
+    val schemaSrc = emptyFrame(spark, schemaOf(spark, table, vTo))
     // both sides read conformed to vTo's logical schema: an ADD COLUMN
     // between vFrom and vTo backfills null on the before-image, so the
     // null-safe compare sees a change only where a value actually landed
@@ -1677,8 +1679,7 @@ object Ledger {
     // RESTARTED after an upstream evolve picks up the widened schema
     // across old and new partitions alike (the Delta CDF
     // restart-on-schema-change contract, proven in LedgerStreamSpec).
-    val payload = readVersion(spark, table, latestVersion(spark, table))
-      .schema.fields.map(_.copy(nullable = true))
+    val payload = schemaOf(spark, table, latestVersion(spark, table)).fields
     val schema = StructType(
       StructField("op", org.apache.spark.sql.types.StringType) +: payload :+
         StructField("commit_version", org.apache.spark.sql.types.IntegerType))
@@ -1736,15 +1737,13 @@ object Ledger {
         // reads the widened schema — readChangesStream derives it from
         // the upstream table, not a sampled footer — and commitBatch
         // auto-widens the replica). Cost: one sidecar read per batch.
-        schemaOf(spark, from, latestVersion(spark, from)).foreach { want =>
-          val missing = want.fieldNames.toSet --
-            (b.columns.toSet - "op" - "commit_version")
-          if (missing.nonEmpty)
-            throw new IllegalStateException(
-              s"upstream $from evolved columns ${missing.mkString(",")} after " +
-              "this subscription started — restart replicate() so the stream " +
-              "picks up the widened CDF schema")
-        }
+        val missing = schemaOf(spark, from, latestVersion(spark, from)).fieldNames.toSet --
+          (b.columns.toSet - "op" - "commit_version")
+        if (missing.nonEmpty)
+          throw new IllegalStateException(
+            s"upstream $from evolved columns ${missing.mkString(",")} after " +
+            "this subscription started — restart replicate() so the stream " +
+            "picks up the widened CDF schema")
         val span = b.agg(min(col("commit_version")), max(col("commit_version"))).head()
         if (!span.isNullAt(0)) {
           val (mn, mx) = (span.getInt(0), span.getInt(1))
@@ -2472,19 +2471,14 @@ object Ledger {
       }
       f.delete(trash, true)
     }
-    // sidecars land BEFORE the manifest — same commit discipline as
-    // evolve/deleteWhere: a branch visible at v0 has its schema/DV.
-    // The parent's CHECK set is INHERITED too: a WAP branch exists to
-    // be published back, so its audit window enforces the same
+    // The parent's CHECK set is INHERITED: a WAP branch exists to be
+    // published back, so its audit window enforces the same
     // invariants — an unconstrained branch would be the one door a
     // violating row could enter the constrained table through.
-    schemaOf(spark, table, fromVersion).foreach(writeSchema(spark, b, 0, _))
-    deletionVector(spark, table, fromVersion)
-      .foreach(_.write.mode("overwrite").parquet(deletePath(b, 0)))
-    val inheritedChecks = constraintsOf(spark, table, fromVersion)
-    if (inheritedChecks.nonEmpty) writeConstraints(spark, b, 0, inheritedChecks)
     writeSmallFile(f, new Path(branchBasePath(table, name)), fromVersion.toString)
-    writeManifest(spark, b, 0, manifest(spark, table, fromVersion))
+    writeVersion(spark, b, 0, manifest(spark, table, fromVersion),
+      schemaOf(spark, table, fromVersion), deletionVector(spark, table, fromVersion),
+      Some(constraintsOf(spark, table, fromVersion)).filter(_.nonEmpty))
     b
   }
 
@@ -2544,13 +2538,11 @@ object Ledger {
       conflict(s"parent advanced past the audited base v$base after the claim")
     // claim held: v_target is ours alone. The _published marker FIRST
     // (see doc comment: dying here leaves a branch that refuses
-    // deletion, the safe residue), then sidecars, then the manifest.
+    // deletion, the safe residue), then the version.
     writeSmallFile(fs(spark, table),
       new Path(branchPublishedPath(table, name)), target.toString)
-    schemaOf(spark, b, bHead).foreach(writeSchema(spark, table, target, _))
-    deletionVector(spark, b, bHead)
-      .foreach(_.write.mode("overwrite").parquet(deletePath(table, target)))
-    writeManifest(spark, table, target, manifest(spark, b, bHead))
+    writeVersion(spark, table, target, manifest(spark, b, bHead),
+      schemaOf(spark, b, bHead), deletionVector(spark, b, bHead))
     target
   }
 
@@ -2588,21 +2580,12 @@ object Ledger {
     * audit forces a full re-branch + re-audit ([[publish]] aborts on
     * an advanced parent, by design). The branch's base→head delta is
     * validated against the parent's base→head delta with the SAME
-    * disjointness rules [[commitPrepared]] applies to an interleaved
-    * commit (branch = the prepared loser, parent = the winner):
-    *
-    *  - a file the branch rewrote that the parent also rewrote →
-    *    ABORT (the branch read bytes that are no longer the truth);
-    *  - the parent evolved the schema → ABORT;
-    *  - the parent added deletion-vector keys (an interleaved DELETE
-    *    WHERE) → ABORT — the branch's vector predates them;
-    *  - the parent released vector keys whose rows are live in its
-    *    added files (re-upsert of a hidden key) → ABORT — the branch's
-    *    vector would re-hide the parent's update; released by physical
-    *    application → safe, the branch's extra entries are inert;
-    *  - a parent-added file whose key range intersects any key the
-    *    branch CHANGED (its full base→head change feed, deletion-
-    *    vector additions included) → ABORT — overlapping writes.
+    * disjointness check [[commitPrepared]] applies to an interleaved
+    * commit ([[requireDisjoint]]; branch = the prepared loser, parent =
+    * the winner). The branch's changed keys are its full base→head
+    * change feed, deletion-vector additions included. A parent CHECK
+    * change conflicts because publish fast-forwards the branch's rows
+    * into the parent unvalidated; the re-branch inherits the new set.
     *
     * All checks and the rebase itself are manifest/changed-keys-sized —
     * no data file moves. Disjoint ⇒ the branch gets ONE new commit
@@ -2621,70 +2604,25 @@ object Ledger {
     require(bHead >= 0, s"branch '$name' has no committed version")
     if (head == base) return bHead // nothing to rebase onto
     require(head > base, s"parent at v$head is BEHIND the branch base v$base")
-    def conflict(why: String) =
-      throw new java.util.ConcurrentModificationException(
-        s"rebase '$name' onto $table v$head aborted: $why (re-branch " +
-          "from the current head and re-run the audit)")
     def paths(df: DataFrame): Set[String] =
       df.select(col("path")).collect().map(_.getString(0)).toSet
     val mB = paths(manifest(spark, table, base))
-    val mH = manifest(spark, table, head)
-    val mHPaths = paths(mH)
     val mBr = manifest(spark, b, bHead)
-    val mBrPaths = paths(mBr)
-    val branchHit = mB -- mBrPaths   // files the branch rewrote/removed
-    val lostHit = branchHit -- mHPaths
-    if (lostHit.nonEmpty)
-      conflict(s"parent rewrote files this branch read: ${lostHit.take(2).mkString(",")}")
-    if (schemaOf(spark, table, head).map(_.toDDL) !=
-        schemaOf(spark, table, base).map(_.toDDL))
-      conflict("parent schema evolved past the audited base")
-    // a parent setConstraints past the base is metadata-only and would
-    // otherwise rebase silently — but the branch's rows were audited
-    // under the OLD check set, and publish fast-forwards them into the
-    // parent unvalidated. Conservative, same as commitPrepared's rule:
-    // conflict, and the re-branch inherits the new set at creation.
-    if (constraintsOf(spark, table, head) != constraintsOf(spark, table, base))
-      conflict("parent CHECK-constraint set changed past the audited base")
-    // deletion-vector rules, branch as the prepared loser
-    val dvB = deletionVector(spark, table, base)
-    val dvH = deletionVector(spark, table, head)
-    val parentAdded = (mHPaths -- mB).toSeq
-    (dvB, dvH) match {
-      case (None, Some(dh)) if dh.limit(1).count() > 0 =>
-        conflict("parent added deletion-vector keys")
-      case (Some(db), dhOpt) =>
-        val k = db.columns.head
-        val dh = dhOpt.getOrElse(db.limit(0))
-        if (dh.join(db, Seq(k), "left_anti").limit(1).count() > 0)
-          conflict("parent added deletion-vector keys")
-        val released = db.join(dh, Seq(k), "left_anti")
-        if (released.limit(1).count() > 0 && parentAdded.nonEmpty) {
-          val keyAtH = readConformed(spark, table, head, parentAdded.toIndexedSeq)
-            .select(col(k))
-          if (released.join(keyAtH, Seq(k), "left_semi").limit(1).count() > 0)
-            conflict("parent re-inserted a deletion-vector key this " +
-              "branch's vector would re-hide")
-        }
-      case _ => ()
-    }
-    // key overlap: parent-added files' ranges vs the branch's full
-    // changed-key set (file moves + DV additions, one span diff)
-    val branchKeys = readChanges(spark, b, 0, bHead, keyCol)
-      .select(col(keyCol).as("ck")).distinct()
-    val touched = mH.filter(col("path").isInCollection(parentAdded :+ ""))
-      .join(branchKeys, col("ck") >= col("min_key") && col("ck") <= col("max_key"),
-        "left_semi")
-    if (touched.limit(1).count() > 0)
-      conflict("parent added files overlapping keys this branch changed")
+    val branchHit = mB -- paths(mBr)   // files the branch rewrote/removed
+    requireDisjoint(spark, table, base, schemaOf(spark, table, base).toDDL, mB,
+      branchHit, dvFrom = base, head = head,
+      readChanges(spark, b, 0, bHead, keyCol).select(col(keyCol).as("ck")).distinct(),
+      who = "parent", me = "this branch", myKeys = "keys this branch changed",
+      conflict = why => throw new java.util.ConcurrentModificationException(
+        s"rebase '$name' onto $table v$head aborted: $why (re-branch " +
+          "from the current head and re-run the audit)"))
     // disjoint: splice — metadata-only, then advance the base
     val target = bHead + 1
-    schemaOf(spark, b, bHead).foreach(writeSchema(spark, b, target, _))
-    deletionVector(spark, b, bHead)
-      .foreach(_.write.mode("overwrite").parquet(deletePath(b, target)))
-    val spliced = mH.filter(!col("path").isInCollection(branchHit.toSeq :+ ""))
+    val spliced = manifest(spark, table, head)
+      .filter(!col("path").isInCollection(branchHit.toSeq :+ ""))
       .unionByName(mBr.filter(!col("path").isInCollection(mB.toSeq :+ "")))
-    writeManifest(spark, b, target, spliced)
+    writeVersion(spark, b, target, spliced, schemaOf(spark, b, bHead),
+      deletionVector(spark, b, bHead))
     writeSmallFile(fs(spark, table), new Path(branchBasePath(table, name)),
       head.toString)
     target

@@ -793,4 +793,26 @@ class LedgerSpec extends AnyFunSuite {
       .filter(col("doc_id").between(100, 120)).count()
     assert(fromPruned == 21)
   }
+
+  test("a version whose every row is gone keeps its schema for reads, the change feed and merges") {
+    import spark.implicits._
+    val t = Ledger.tableRoot("ledger_all_deleted")
+    val docs = (0L until 20L).map(i => (i, s"src${i % 4}", s"document body $i"))
+      .toDF("doc_id", "source", "text")
+    Ledger.create(spark, t, docs, "doc_id", nFiles = 2)
+    Ledger.deleteWhere(spark, t, 0, "doc_id", lit(true))
+    // the compaction reads through the vector: v2's manifest holds no rows
+    Ledger.compact(spark, t, 1, "doc_id")
+    val v2 = Ledger.readVersion(spark, t, 2)
+    assert(v2.columns.toSeq == Ledger.readVersion(spark, t, 0).columns.toSeq,
+      "an empty version must keep the table's columns")
+    assert(v2.count() == 0)
+    assert(Ledger.readChanges(spark, t, 1, 2, "doc_id").count() == 0,
+      "compacting away hidden rows changes no live row")
+    val upserts = Seq((3L, "upsert", "srcN", "back 3"), (7L, "upsert", "srcN", "back 7"),
+        (50L, "upsert", "srcN", "new 50"))
+      .toDF("doc_id", "op", "source", "text")
+    assert(Ledger.merge(spark, t, 2, upserts, "doc_id") == 3)
+    assert(Ledger.readVersion(spark, t, 3).count() == 3)
+  }
 }

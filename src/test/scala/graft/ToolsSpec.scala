@@ -41,4 +41,15 @@ class ToolsSpec extends AnyFunSuite {
     val reused = calls.groupBy(_._2).filter(_._2.size > 1)
     assert(reused.isEmpty, s"standing names used at more than one call site: $reused")
   }
+
+  /** Every ledger version lands through one commit tail (sidecars,
+    * then the manifest), so the manifest write has one call site. */
+  test("the Ledger writes a manifest at exactly one call site") {
+    val src = scala.io.Source.fromFile("src/main/scala/graft/etl/Ledger.scala", "UTF-8")
+    val text = try src.mkString finally src.close()
+    val defs = """def writeManifest\(""".r.findAllMatchIn(text).size
+    val calls = """writeManifest\(""".r.findAllMatchIn(text).size - defs
+    assert(defs == 1, s"scan found $defs definitions of writeManifest")
+    assert(calls == 1, s"writeManifest must have one call site, found $calls")
+  }
 }
