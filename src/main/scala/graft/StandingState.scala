@@ -9,8 +9,7 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 /** Session-scoped ledger of the engine's standing artifacts — every
   * localCheckpointed RDD/Dataset and every built index, lineage, label
   * table or sidecar the engine keeps for a session (kNN trie, IVF
-  * centroids, BM25 doc index, shared LSH pair tables, ledger lineages,
-  * …).
+  * centroids, BM25 doc index, CC label tables, ledger lineages, …).
   *
   * ONE registry, [[standing]], holds them all. It is keyed
   * (applicationId, name, scope) and builds that key itself, so no
@@ -18,10 +17,10 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
   * built under one SparkContext is never served to another (a stopped
   * context's checkpoint blocks and LocalRelations are dead handles).
   * Standing artifacts are indexes, codebooks, tries, lineages and
-  * sidecars — state a declared query READS; a declared query's own
-  * result should not stand here (it would time a lookup, not the
-  * query). The served kNN branches (`knn-router-served`,
-  * `knn-part-served`) still do.
+  * sidecars — state a declared query READS. A declared query computes
+  * its own output on every call and never returns a standing artifact
+  * as its result (that would time a lookup, not the query);
+  * DeterminismSpec checks this for every declared query.
   *
   * Two memo types are kept beside the registry because their
   * semantics differ, not their keying:

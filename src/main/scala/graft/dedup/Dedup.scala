@@ -84,16 +84,10 @@ object Dedup {
       .withColumnRenamed("pos", "band_idx").withColumnRenamed("col", "band_hash")
   }
 
-  /** MinHash-verified near-dup pairs, memoized per (session, dir,
-    * threshold) as a localCheckpointed result so q_minhash_pairs and
-    * q_dup_clusters share ONE signature/LSH computation per run, and so
-    * every intermediate persist is released before returning (no cache
-    * leaks across a long-lived session). */
-  def minhashPairs(spark: SparkSession, dir: String, threshold: Double = 0.5): DataFrame =
-    graft.StandingState.standing(spark, "minhash-pairs", (dir, threshold))(
-      computeMinhashPairs(spark, dir, threshold))
-
-  private def computeMinhashPairs(spark: SparkSession, dir: String, threshold: Double): DataFrame = {
+  /** MinHash-verified near-dup pairs, computed on every call and
+    * localCheckpointed so every intermediate persist is released before
+    * returning (no cache leaks across a long-lived session). */
+  def minhashPairs(spark: SparkSession, dir: String, threshold: Double = 0.5): DataFrame = {
     val (pairs, handles) = minhashPairsPipeline(spark, dir, threshold)
     val out = pairs.localCheckpointTracked() // eager: materialize once, then drop upstream caches
     handles.foreach(_.unpersist(blocking = false))
@@ -323,20 +317,17 @@ object Dedup {
 
   /** Declared query: near-dup clusters of the corpus (docs in ≥1
     * MinHash-verified pair, labeled by their cluster's min doc_id).
-    * Shares the memoized pair computation with [[qMinhashPairs]] — one
-    * LSH pipeline per run regardless of which query runs first. */
+    * Computes its pairs and its labels on every call. */
   def qDupClusters(spark: SparkSession, dir: String): DataFrame =
-    corpusClusters(spark, dir)
+    dupClusters(minhashPairs(spark, dir))
       .orderBy(col("doc_id"))
 
-  /** The corpus CC label table as a STANDING artifact (r13): the CC
-    * label table is the dedup deliverable a 100 TB deployment maintains
-    * as a table (the scale-shape notes below already said so) — shared
-    * by q_dup_clusters, q_leakage_split and q_curate, which each re-ran
-    * the whole driver-coordinated propagation loop per call. Registered
-    * per (session, dir) exactly like [[minhashPairs]]'s pair table:
-    * released with every other standing artifact, rebuilt lazily, never
-    * persisted across runs. */
+  /** The corpus CC label table as a STANDING index (r13): the label
+    * table a 100 TB deployment maintains beside the corpus, which
+    * q_leakage_split and q_curate read to map documents to clusters,
+    * so neither re-runs the driver-coordinated propagation loop per
+    * call. Registered per (session, dir): released with every other
+    * standing artifact, rebuilt lazily, never persisted across runs. */
   def corpusClusters(spark: SparkSession, dir: String): DataFrame =
     graft.StandingState.standing(spark, "corpus-clusters", dir)(
       dupClusters(minhashPairs(spark, dir)))

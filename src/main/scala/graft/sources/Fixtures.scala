@@ -450,14 +450,13 @@ object Fixtures {
     * planted-dup pair graph ([[qEmbDup]]'s edges) via the same
     * min-label propagation as document dup clustering — the step that
     * turns pairwise semantic-dup detection into one canonical vector
-    * per cluster. Oracle mirrors with a recursive CTE. The label table
-    * is a standing artifact, like [[graft.dedup.Dedup.corpusClusters]]. */
+    * per cluster. Oracle mirrors with a recursive CTE. The pairs and
+    * labels are computed on every call. */
   def qEmbClusters(spark: SparkSession, dir: String): DataFrame = {
     ensure(spark)
-    graft.StandingState.standing(spark, "emb-clusters", embDupPath)(
-      graft.dedup.Dedup.dupClusters(
+    graft.dedup.Dedup.dupClusters(
         graft.vector.VectorOps.embeddingDupPairs(spark.read.parquet(embDupPath))
-          .select(col("id_a").as("doc_a"), col("id_b").as("doc_b"))))
+          .select(col("id_a").as("doc_a"), col("id_b").as("doc_b")))
       .select(col("doc_id").as("vec_id"), col("cluster_id"))
       .orderBy(col("vec_id"))
   }

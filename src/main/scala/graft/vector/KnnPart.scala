@@ -276,33 +276,6 @@ object KnnPart {
     * #4; KnnPartSpec's eviction-race case pins both halves). The flat
     * path builds inline (no registry entry, no eviction hazard) and
     * keeps the exact gate plan. */
-  /** Served partitioned results, memoized like every standing artifact
-    * (r13): the lease fix made each trie-path serve EAGER (the
-    * self-contained checkpoint is what de-races budget eviction) — but
-    * without a memo that eager serve re-ran on every call, and at sf10
-    * that was ~18 s per invocation, twice per bench pass
-    * (q_knn_filtered_part 4.3 s in the r11 rung → 72.7 s in the first
-    * r13 sf10 cut; isolated probes reproduced ~18 s per REPEAT call).
-    * The r12 VERDICT prescribed exactly this memoization for the
-    * router's served branches — the declared-corpus serve is the same
-    * class of standing artifact. Released/rebuilt with the ledger.
-    *
-    * WHY this memo is deliberately EXEMPT from the bounded-registry
-    * rule (r13 ADVICE adjudicated): the rule exists because ENTRY
-    * artifacts (tries + probe relations) are corpus-partition-sized —
-    * one per predicate value is an unbounded standing cost. A served
-    * frame is OUTPUT-sized (nQ×k rows — KB, not partition-scale), so a
-    * value sweep accumulates kilobytes per value, not gigabytes. And a
-    * budgeted eviction here could not release those kilobytes anyway:
-    * the API hands served frames to callers with session lifetime, and
-    * KnnPartSpec's eviction-race case pins that a handed-out result
-    * SURVIVES later evictions — unpersisting a served frame's
-    * checkpoint behind the holder's back fails the holder's collect
-    * (localCheckpoint lineage is truncated; the r12-VERDICT-#4 hazard),
-    * which an r14 bounded-memo experiment reproduced verbatim. So the
-    * bound would bound the map, not the blocks. Output-sized frames
-    * ride the session ledger and free at release(), like every other
-    * handed-out result. */
   def knnFilteredPartitioned(spark: SparkSession, dir: String,
       labelValue: Int, k: Int): DataFrame = {
     val nF = partitionCount(spark, dir, labelValue)
@@ -315,14 +288,13 @@ object KnnPart {
         partitionProbes(spark, dir, labelValue, p0, maxD), nQ, nF, k)
     } else {
       val key = (spark.sparkContext.applicationId, dir, labelValue)
-      graft.StandingState.standing(spark, "knn-part-served", (dir, labelValue, k))(
-        partRegistry.pinned(key)(
-            entryBuild(spark, key, codedPartition(spark, dir, labelValue, maxD),
-              p0, maxD)) { e =>
-          val served = serveFiltered(queriesAll, e.emb,
-            probesOf(spark, dir, e), nQ, nF, k)
-          graft.StandingState.materializeStatsReset(served)._1
-        })
+      partRegistry.pinned(key)(
+          entryBuild(spark, key, codedPartition(spark, dir, labelValue, maxD),
+            p0, maxD)) { e =>
+        val served = serveFiltered(queriesAll, e.emb,
+          probesOf(spark, dir, e), nQ, nF, k)
+        graft.StandingState.materializeStatsReset(served)._1
+      }
     }
   }
 

@@ -137,25 +137,6 @@ object KnnRouter {
       fixturePath
     }
 
-  /** Served routed branches, MATERIALIZED and memoized like the arms'
-    * own standing artifacts (r12 VERDICT #2: the fixture's 12k-query
-    * serve cost a flat ~4 s on every bench pass — deterministic work
-    * over standing inputs, i.e. exactly what the standing-state ledger
-    * exists for; a routed result in production is a served TABLE, not
-    * a per-read recompute). Keyed by (tag, k); released with every
-    * other standing artifact at [[graft.StandingState.release]].
-    *
-    * One routed branch, served end-to-end through the router's chosen
-    * arm and checkpointed (self-contained — no lazy reference to either
-    * arm's index blocks survives into the returned frame). */
-  private[graft] def servedBranch(spark: SparkSession, pred: Column, tag: String,
-      partKey: Option[Int], k: Int): DataFrame = {
-    val fd = fixtureDir(spark)
-    graft.StandingState.standing(spark, "knn-router-served", (tag, k))(
-      graft.StandingState.materializeStatsReset(
-        knnFilteredRouted(spark, fd, pred, tag, partKey, k))._1)
-  }
-
   /** Q-knn-routed: the router exercised on BOTH shapes in one query —
     * `label = 7` (tight cluster: routes to the per-value trie) and
     * `vec_id % 2 = 0` (uncorrelated: every leaf keeps ~half its
@@ -166,9 +147,10 @@ object KnnRouter {
     * union's rows attributable. Scale-independent by design (the
     * fixture is the corpus), like every fixture-backed query. */
   def qKnnRouted(spark: SparkSession, dir: String, k: Int = 3): DataFrame = {
-    val b1 = servedBranch(spark, col("label") === 7, "label7", Some(7), k)
+    val fd = fixtureDir(spark)
+    val b1 = knnFilteredRouted(spark, fd, col("label") === 7, "label7", Some(7), k)
       .withColumn("pred", lit("label7"))
-    val b2 = servedBranch(spark, col("vec_id") % 2 === 0, "par0", None, k)
+    val b2 = knnFilteredRouted(spark, fd, col("vec_id") % 2 === 0, "par0", None, k)
       .withColumn("pred", lit("par0"))
     b1.unionByName(b2)
       .select(col("pred"), col("q_id"), col("rn"), col("vec_id"), col("sim"))
@@ -185,7 +167,7 @@ object KnnRouter {
     * at a nonexistent per-value trie, or post-filtering wrongly —
     * breaks the hash. */
   def qKnnRoutedRange(spark: SparkSession, dir: String, k: Int = 3): DataFrame =
-    servedBranch(spark, col("label").between(3, 5), "range35", None, k)
+    knnFilteredRouted(spark, fixtureDir(spark), col("label").between(3, 5), "range35", None, k)
       .select(col("q_id"), col("rn"), col("vec_id"), col("sim"))
       .orderBy(col("q_id"), col("rn"))
 }

@@ -567,18 +567,6 @@ object VectorOps {
       .orderBy(col("q_id"), col("rn"))
   }
 
-  /** kNN-GRAPH CLUSTERING — semantic cluster curation: build the
-    * mutual-kNN graph from the corpus-wide [[qKnnJoin]] edges (keep
-    * (a,b) only when b is in a's top-k AND a is in b's top-k — the
-    * standard symmetrization that stops hub vectors from chaining
-    * unrelated regions together), then connected components via the
-    * same min-label propagation as document dup clustering. The edge
-    * list is k·n rows max — tiny next to the corpus — so the iterative
-    * CC runs on id pairs only; vectors never enter the loop. maxIter
-    * is raised because CC converges in O(component diameter) rounds
-    * and mutual-kNN chains can be path-like; each round is one join on
-    * the edge table. Output: every vector in ≥1 mutual edge, labeled
-    * by its component's min vec_id. */
   /** Mutual-kNN edge table (a < b), memoized and materialized once per
     * (session, dir): the symmetrized graph is the shared input of the
     * CC clustering AND the centrality ranking below — like the IVF
@@ -600,23 +588,37 @@ object VectorOps {
       mutual
     }
 
-  /** Cluster labels memoized per (session, dir) as a localCheckpointed
-    * table — like [[ivfCentroids]], the mutual-kNN CC is a write-once
-    * batch artifact (a standing label table at 100 TB), so the curation
-    * composite must not re-run the kNN join + CC loop the clustering
-    * query already paid for. */
-  private def knnClusterLabels(spark: SparkSession, dir: String): DataFrame =
-    graft.StandingState.standing(spark, "knn-cluster-labels", dir) {
-      val (labels, _) = graft.StandingState.materializeStatsReset(
-        graft.dedup.Dedup.dupClusters(
-            knnMutualEdges(spark, dir)
-              .select(col("a").as("doc_a"), col("b").as("doc_b")), maxIter = 100)
-          .select(col("doc_id").as("vec_id"), col("cluster_id")))
-      labels
-    }
+  /** Mutual-kNN CC labels `(vec_id, cluster_id)`, computed from the
+    * standing edge table — one definition for the clustering query,
+    * which runs it on every call, and the standing label index below. */
+  private def computeKnnClusterLabels(spark: SparkSession, dir: String): DataFrame =
+    graft.dedup.Dedup.dupClusters(
+        knnMutualEdges(spark, dir)
+          .select(col("a").as("doc_a"), col("b").as("doc_b")), maxIter = 100)
+      .select(col("doc_id").as("vec_id"), col("cluster_id"))
 
+  /** The cluster labels as a STANDING index per (session, dir) — like
+    * [[ivfCentroids]], a write-once batch artifact (a standing label
+    * table at 100 TB) that the curation composite reads instead of
+    * re-running the kNN join + CC loop. */
+  private[graft] def knnClusterLabels(spark: SparkSession, dir: String): DataFrame =
+    graft.StandingState.standing(spark, "knn-cluster-labels", dir)(
+      computeKnnClusterLabels(spark, dir))
+
+  /** kNN-GRAPH CLUSTERING — semantic cluster curation: build the
+    * mutual-kNN graph from the corpus-wide [[qKnnJoin]] edges (keep
+    * (a,b) only when b is in a's top-k AND a is in b's top-k — the
+    * standard symmetrization that stops hub vectors from chaining
+    * unrelated regions together), then connected components via the
+    * same min-label propagation as document dup clustering. The edge
+    * list is k·n rows max — tiny next to the corpus — so the iterative
+    * CC runs on id pairs only; vectors never enter the loop. maxIter
+    * is raised because CC converges in O(component diameter) rounds
+    * and mutual-kNN chains can be path-like; each round is one join on
+    * the edge table. Output: every vector in ≥1 mutual edge, labeled
+    * by its component's min vec_id. */
   def qKnnClusters(spark: SparkSession, dir: String): DataFrame =
-    knnClusterLabels(spark, dir).orderBy(col("vec_id"))
+    computeKnnClusterLabels(spark, dir).orderBy(col("vec_id"))
 
   /** PAGERANK CENTRALITY over the mutual-kNN graph — the link-quality
     * signal web-curation pipelines rank harvest candidates with,

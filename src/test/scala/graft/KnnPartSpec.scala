@@ -181,6 +181,7 @@ class KnnPartSpec extends AnyFunSuite {
         .forall(_.getStorageLevel != org.apache.spark.storage.StorageLevel.NONE))
       // the evicted value rebuilds from source, byte-identical
       assert(serve(0) == r0, "rebuilt-after-eviction must equal the first build")
+      assert(KnnPart.entryHandles(spark, d, 0).nonEmpty, "the re-serve must rebuild the evicted entry")
     } finally {
       prevBudget match {
         case Some(v) => sys.props("graft.knn.part.budget") = v
@@ -234,6 +235,7 @@ class KnnPartSpec extends AnyFunSuite {
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSeq
       val rebuilt = KnnPart.knnFilteredPartitioned(spark, d, 0, k).collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSeq
+      assert(KnnPart.entryHandles(spark, d, 0).nonEmpty, "the rebuild must re-register the evicted entry")
       assert(held == rebuilt,
         "a result handed out before eviction must survive it unchanged")
     } finally {
